@@ -12,9 +12,8 @@ Match rules re-expressed relationally:
   (both URLs present and different) scores −1000; pairs with
   ``score ≥ threshold`` match. Candidate argmax per left row via a window.
 - **CC merge** (north_star): the union of K2/K3 match edges is collapsed by
-  iterative min-label propagation (small-star style: each node adopts the
-  min component id among itself and its neighbors until fixpoint —
-  O(log d) DataFrame iterations, each one shuffle keyed by node). The
+  alternating large-star / small-star rounds (Kiveris et al.) —
+  O(log n) DataFrame iterations whatever the graph's diameter. The
   canonical id is ``min(kb_id)`` per component — deterministic.
 
 Scale: all of this runs on the KB side (10^6–10^8 rows), never on the
@@ -27,9 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-from pyspark.storagelevel import StorageLevel
 
-__all__ = ["unique_id_edges", "alias_match_edges", "connected_components",
+__all__ = ["unique_id_edges", "alias_match_edges",
            "connected_components_star", "canonical_map"]
 
 
@@ -97,69 +95,20 @@ def alias_match_edges(kb: DataFrame, threshold: int = 2) -> DataFrame:
             .filter(F.col("_rn") == 1).drop("_rn", "score"))
 
 
-def connected_components(edges: DataFrame, max_iter: int = 30,
-                         num_partitions: int | None = None,
-                         check_every: int = 2) -> DataFrame:
-    """(node, comp) via iterative min-label propagation over undirected
-    edges(src, dst). Deterministic; converges in O(diameter) rounds.
-    Each round is one shuffle keyed by node; lineage is truncated via
-    eager localCheckpoint so the plan stays bounded.
-
-    Scale levers (this is also the corpus-scale dedup-cluster path):
-    - ``num_partitions`` defaults to 2× the cluster parallelism (input-
-      proportional); KB-side callers with tiny alias graphs pass a small
-      value explicitly since per-round task count dominates there.
-    - the driver-side convergence check runs every ``check_every`` rounds,
-      not every round; labels are monotonically non-increasing, so
-      equality with the last checked snapshot implies a fixpoint.
-    - the undirected edge list is partitioned by ``src`` and persisted
-      (memory/disk) so each round's join reuses a co-located build side.
-    - upgrade path for graphs with large diameter × trillion edges:
-      large-star/small-star (Kiveris et al.), which converges in
-      O(log n) rounds of the same shuffle shape.
-    """
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
-    und = (edges.select("src", "dst")
-           .union(edges.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst")))
-           .distinct()
-           .repartition(num_partitions, "src")
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    labels = (und.select(F.col("src").alias("node"))
-              .distinct()
-              .withColumn("comp", F.col("node")))
-    prev_checked = labels   # identity labeling; valid monotonic baseline
-    for i in range(max_iter):
-        nbr_min = (und.join(labels, und.dst == labels.node)
-                   .groupBy("src").agg(F.min("comp").alias("nbr_comp")))
-        new = (labels.join(nbr_min, labels.node == nbr_min.src, "left")
-               .select("node",
-                       F.least(F.col("comp"),
-                               F.coalesce("nbr_comp", F.col("comp"))).alias("comp")))
-        new = new.localCheckpoint(eager=True)
-        labels = new
-        if (i + 1) % check_every == 0 or i == max_iter - 1:
-            changed = (labels.alias("n")
-                       .join(prev_checked.alias("o"), "node")
-                       .filter(F.col("n.comp") != F.col("o.comp"))
-                       .limit(1).count())
-            if changed == 0:
-                break
-            prev_checked = labels
-    und.unpersist()
-    return labels
-
-
 def connected_components_star(edges: DataFrame, max_iter: int = 25,
                               num_partitions: int | None = None) -> DataFrame:
     """(node, comp) via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds regardless of graph DIAMETER, unlike
-    min-label propagation's O(diameter). This is the corpus-scale path
-    for near-dup pair graphs, whose similarity chains can be arbitrarily
-    long; each round is two groupBy(min) + join shuffles keyed by node.
+    converges in O(log n) rounds regardless of graph DIAMETER (min-label
+    propagation needs O(diameter)). One algorithm for the KB alias graph,
+    document co-occurrence components and near-dup pair graphs, whose
+    similarity chains can be arbitrarily long; each round is two
+    groupBy(min) + join shuffles keyed by node.
+
+    ``num_partitions`` defaults to 2× the cluster parallelism (input-
+    proportional); callers with tiny graphs pass a small value, since
+    per-round task count dominates there. Self-loops are dropped, so a
+    node whose only edge is to itself gets no label.
 
     - large-star: every node points its LARGER neighbors at the minimum
       of its closed neighborhood;
@@ -215,15 +164,12 @@ def connected_components_star(edges: DataFrame, max_iter: int = 25,
             break
         sig = new_sig
     # fixpoint: every edge is (member, root); roots label themselves.
-    # min-aggregate as a safety net for a max_iter exhaustion (a true
-    # fixpoint is already a star with one edge per member)
-    members = (e.select(F.col("a").alias("node"), F.col("b").alias("comp"))
-               .groupBy("node").agg(F.min("comp").alias("comp")))
-    roots = (e.select(F.col("b").alias("node")).distinct()
-             .join(e.select(F.col("a").alias("node")).distinct(),
-                   "node", "left_anti")
-             .withColumn("comp", F.col("node")))
-    return members.union(roots)
+    # One min-aggregate over both: a member's root is below it, and the
+    # min is a safety net for a max_iter exhaustion (a true fixpoint is
+    # already a star with one edge per member)
+    return (e.select(F.col("a").alias("node"), F.col("b").alias("comp"))
+            .union(e.select(F.col("b").alias("node"), F.col("b").alias("comp")))
+            .groupBy("node").agg(F.min("comp").alias("comp")))
 
 
 def canonical_map(kb: DataFrame, threshold: int = 2) -> DataFrame:
@@ -233,5 +179,8 @@ def canonical_map(kb: DataFrame, threshold: int = 2) -> DataFrame:
     edges = unique_id_edges(kb).union(alias_match_edges(kb, threshold)).distinct()
     # KB-side alias graph is tiny: a small fixed partition count beats the
     # input-proportional default (per-round task overhead dominates)
-    cc = connected_components(edges, num_partitions=4)
-    return cc.select(F.col("node").alias("kb_id"), F.col("comp").alias("canon_id"))
+    cc = connected_components_star(edges, num_partitions=4)
+    # one partition: every consumer broadcasts the map, and a cached
+    # frame keeps its shuffle partition count (AQE does not coalesce it)
+    return cc.select(F.col("node").alias("kb_id"),
+                     F.col("comp").alias("canon_id")).coalesce(1)

@@ -2,11 +2,12 @@
 
 These are the irregular string rewrites of the reference's dictionary build
 (``/root/reference/figa/make_automat/KB2namelist.py``). They are kept as
-plain functions over plain values so that (a) the Spark build wraps them in
-Arrow-batched pandas UDFs (SURVEY §2.10 — never per-row Python over the
-data path; the KB side is small and batched), and (b) the single-process
-parity oracle calls them directly, guaranteeing the two paths share one
-implementation of the tricky string logic.
+plain functions over plain values so that (a) the Spark build calls them
+inside one ``mapInArrow`` pass over Arrow batches of KB rows
+(:mod:`kglinker.kb.names` — never per-row Python over the data path; the
+KB side is small and batched), and (b) the single-process parity oracle
+calls them directly, guaranteeing the two paths share one implementation
+of the tricky string logic.
 
 Czech morphological inflection (G8, the reference's ``czechnames/
 namegen.py`` grammar system) is implemented from scratch in

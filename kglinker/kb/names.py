@@ -3,9 +3,10 @@
 
 Spark re-expression of ``create_cedar.sh`` → ``KB2namelist.py`` →
 ``uniq_namelist.py``: the alias/redirect explode and tag-stripping are
-Column expressions (P1/P3/P4 → ``explode``/``regexp_replace``, Catalyst
-prunes + pushes them down); the irregular generators (G1–G9) run as one
-Arrow-batched pandas UDF over the (small) KB; the A1 group-merge and A2
+Column expressions (P1/P3/P4 → ``array_union``/``regexp_replace``,
+Catalyst prunes + pushes them down); the irregular generators (G1–G9) and
+the P2 filter run in one ``mapInArrow`` pass over the (small) KB; the
+G10 surnames stay Column expressions; the A1 group-merge and A2
 confidence ordering are a single ``groupBy(surface)`` with a
 ``sort_array(struct(-confidence, kb_id))`` — exactly the reference's
 "order candidate ids by KB CONFIDENCE desc, fragment sentinel last"
@@ -49,74 +50,17 @@ def _stop_variants() -> set[str]:
 
 
 @F.pandas_udf(_VARIANT_SCHEMA)
-def _gen_variants(name: pd.Series, etype: pd.Series, country: pd.Series,
-                  source_loc: pd.Series, description: pd.Series) -> pd.Series:
-    """G1–G7 variant generation, Arrow-batched (SURVEY §2.10.2)."""
-    out = []
-    for n, t, c, sl, d in zip(name, etype, country, source_loc, description):
-        base = t.split(":")[0] if t else ""
-        if base == "person":
-            out.append(X.person_variants(n))
-        elif base in ("organisation", "event"):
-            out.append(X.org_event_variants(n, base))
-        elif base == "settlement":
-            out.append(X.settlement_variants(n, c or "", d or ""))
-        elif base == "watercourse":
-            # watercourses pair with SOURCE_LOC (KB2namelist.py:380-382)
-            out.append(X.settlement_variants(n, sl or "", d or ""))
-        else:
-            out.append([])
-    return pd.Series(out)
-
-
-@F.pandas_udf(_VARIANT_SCHEMA)
 def _gen_subnames(name: pd.Series) -> pd.Series:
     """G9 fragment extraction, Arrow-batched."""
     return pd.Series([X.subnames(n) for n in name])
 
 
-@F.pandas_udf(_VARIANT_SCHEMA)
-def _gen_inflections(surface: pd.Series, etype: pd.Series,
-                     gender: pd.Series, vocative: pd.Series) -> pd.Series:
-    """G8: Czech oblique-case forms from the declension generator
-    (kglinker/kb/czech_morph.py — the from-scratch namegen counterpart).
-    Like the reference (czechnames runs over every key_inflection,
-    KB2namelist.py main loop), this applies to EVERY base surface (name,
-    aliases, redirects) — persons get full-name declension plus the
-    variant family per inflected form; location types get the
-    single-word place paradigms. ``vocative`` (a literal column, r5)
-    opts person names into the vocative case — the namelist default is
-    off and byte-stable."""
-    from kglinker.kb.czech_morph import czech_location_inflections
-    out = []
-    for s, t, g, v in zip(surface, etype, gender, vocative):
-        base = t.split(":")[0] if t else ""
-        acc: set[str] = set()
-        if base == "person":
-            for f in X.czech_inflections(s, g or "", vocative=bool(v)):
-                acc.add(f)
-                acc.update(X.person_variants(f))
-        elif base in ("settlement", "country", "watercourse", "geo"):
-            acc.update(czech_location_inflections(s))
-        out.append(sorted(acc))
-    return pd.Series(out)
-
-
-@F.pandas_udf(T.BooleanType())
-def _unsuitable(surface: pd.Series, etype: pd.Series) -> pd.Series:
-    """P2 filter (KB2namelist.py:210-250) with allow-list bypass."""
-    allow = frozenset(ALLOWLIST)
-    return pd.Series([X.is_unsuitable(s, t or "", allow)
-                      for s, t in zip(surface, etype)])
-
-
-def _base_surfaces(kb: DataFrame) -> DataFrame:
-    """P1: NAME + ALIASES + REDIRECTS → one row per surface form, with
-    ``#lang=``/``#ntype=`` tags stripped (KB2namelist.py:146-165) and
-    whitespace normalized (P3). Pure Column expressions → codegen.
-    Carries ``_gender``/``confidence`` through so G8 inflection can run
-    over base rows WITHOUT re-joining the KB (a forced broadcast of a
-    10^7–10^8-row KB projection was the r3-advice driver-memory risk)."""
+def _bases() -> F.Column:
+    """P1: NAME + ALIASES + REDIRECTS as one array of surface forms, with
+    ``#lang=``/``#ntype=`` tags stripped (KB2namelist.py:146-165),
+    whitespace normalized (P3) and empty forms dropped. Column
+    expressions on purpose: Java ``\\s`` and Spark ``trim`` are the
+    namelist's definition of whitespace, not Python's."""
     surfaces = F.array_union(
         F.array(F.col("name")),
         F.array_union(
@@ -124,16 +68,82 @@ def _base_surfaces(kb: DataFrame) -> DataFrame:
             F.split(F.coalesce(F.col("redirects"), F.lit("")), r"\|"),
         ),
     )
-    return (kb
-            .select("kb_id", "type",
-                    F.coalesce("gender", F.lit("")).alias("_gender"),
-                    "confidence",
-                    F.explode(surfaces).alias("raw"))
-            .withColumn("surface", F.trim(F.regexp_replace(
-                F.regexp_replace("raw", r"#(?:lang|ntype)=[^#|]*", ""),
-                r"\s+", " ")))
-            .filter(F.col("surface") != "")
-            .drop("raw"))
+    clean = F.transform(surfaces, lambda s: F.trim(F.regexp_replace(
+        F.regexp_replace(s, r"#(?:lang|ntype)=[^#|]*", ""), r"\s+", " ")))
+    return F.filter(clean, lambda s: s != "")
+
+
+def _variants(name: str, base: str, country: str, source_loc: str,
+              description: str) -> list[str]:
+    """G1–G7 variants of one KB row's NAME."""
+    if base == "person":
+        return X.person_variants(name)
+    if base in ("organisation", "event"):
+        return X.org_event_variants(name, base)
+    if base == "settlement":
+        return X.settlement_variants(name, country, description)
+    if base == "watercourse":
+        # watercourses pair with SOURCE_LOC (KB2namelist.py:380-382)
+        return X.settlement_variants(name, source_loc, description)
+    return []
+
+
+def _inflections(surface: str, base: str, gender: str,
+                 vocative: bool) -> set[str]:
+    """G8: Czech oblique-case forms from the declension generator
+    (kglinker/kb/czech_morph.py — the from-scratch namegen counterpart).
+    Like the reference (czechnames runs over every key_inflection,
+    KB2namelist.py main loop), this applies to EVERY base surface —
+    persons get full-name declension plus the variant family per
+    inflected form; location types get the single-word place paradigms.
+    ``vocative`` opts person names into the vocative case."""
+    from kglinker.kb.czech_morph import czech_location_inflections
+    acc: set[str] = set()
+    if base == "person":
+        for f in X.czech_inflections(surface, gender, vocative=vocative):
+            acc.add(f)
+            acc.update(X.person_variants(f))
+    elif base in ("settlement", "country", "watercourse", "geo"):
+        acc.update(czech_location_inflections(surface))
+    return acc
+
+
+_ROW_COLS = ("kb_id", "type", "gender", "_inflect", "name", "country",
+             "source_loc", "description", "_bases")
+_SURFACE_DDL = "surface string, kb_id long, type string, is_fragment boolean"
+
+
+def _surface_batches(batches, vocative: bool):
+    """Scored KB rows → ``(surface, kb_id, type, is_fragment)``: base
+    surfaces + G1–G7 variants + G8 inflections minus P2-unsuitable forms
+    (KB2namelist.py:210-250), then the G9 subname fragments of person
+    rows (sentinel N, uniq_namelist.py:101-104). One Python pass per
+    batch; kb_id stays null on fragments — fragment→candidate mapping
+    lives in the separate subname map (D7), like the reference's
+    namedict."""
+    import pyarrow as pa
+    schema = pa.schema([("surface", pa.string()), ("kb_id", pa.int64()),
+                        ("type", pa.string()), ("is_fragment", pa.bool_())])
+    allow = frozenset(ALLOWLIST)
+    for rb in batches:
+        out: list[tuple] = []
+        cols = [rb.column(c).to_pylist() for c in _ROW_COLS]
+        for kb_id, t, g, infl, name, c, sl, d, bases in zip(*cols):
+            etype = t or ""
+            base = etype.split(":")[0]
+            forms = set(bases)
+            forms.update(_variants(name, base, c or "", sl or "", d or ""))
+            if infl:
+                for s in bases:
+                    forms |= _inflections(s, base, g or "", vocative)
+            out += [(s, kb_id, t, False) for s in forms
+                    if not X.is_unsuitable(s, etype, allow)]
+            if etype.startswith("person"):
+                out += [(s, None, "person", True) for s in X.subnames(name)]
+        cols = list(zip(*out)) if out else [[]] * len(schema)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(v, type=f.type) for v, f in zip(cols, schema)],
+            schema=schema)
 
 
 def build_namelist(kb_scored: DataFrame,
@@ -157,52 +167,23 @@ def build_namelist(kb_scored: DataFrame,
     the vocative case ("Jane Nováku"), matching the reference namegen's
     grammar output; the default keeps the surface set byte-stable.
     """
-    base = _base_surfaces(kb_scored)
-
-    variants = (kb_scored
-                .select("kb_id", "type",
-                        F.explode(_gen_variants(
-                            "name", "type",
-                            F.coalesce("country", F.lit("")),
-                            F.coalesce("source_loc", F.lit("")),
-                            F.coalesce("description", F.lit("")))).alias("surface")))
-
-    # G8 Czech inflections (generator-backed since r3) for persons AND
-    # locations, over every base surface (name/aliases/redirects) — the
-    # reference's create_cedar.sh:136-142 runs namegen over all
-    # key_inflections in its default dictionary build
-    persons = kb_scored.filter(F.col("type").startswith("person"))
-    infl_base = base
-    if inflection_min_confidence is not None:
-        infl_base = base.filter(
-            F.col("confidence") >= float(inflection_min_confidence))
-    # gender rides along from _base_surfaces — no KB re-join, no broadcast
-    # (the r3-advice fix: a forced broadcast of the full KB projection
-    # would OOM the driver at reference-scale 10^7-row KBs)
-    inflected = (infl_base
-                 .select("kb_id", "type",
-                         F.explode(_gen_inflections(
-                             "surface", "type", "_gender",
-                             F.lit(vocative)))
-                         .alias("surface")))
-
-    direct = (base.select("kb_id", "type", "surface")
-              .unionByName(variants)
-              .unionByName(inflected)
-              .filter(~_unsuitable("surface", "type"))
-              .withColumn("is_fragment", F.lit(False)))
-
-    # G9 subnames → fragment rows (sentinel N, uniq_namelist.py:101-104);
-    # kb_id kept null here — fragment→candidate mapping lives in the
-    # separate subname map (D7), exactly like the reference's namedict.
-    frag = (persons
-            .select(F.explode(_gen_subnames("name")).alias("surface"))
-            .withColumn("kb_id", F.lit(None).cast("long"))
-            .withColumn("type", F.lit("person"))
-            .withColumn("is_fragment", F.lit(True)))
+    # G1–G9 in one Python boundary per KB partition: separate scalar
+    # UDFs would each plan as an ArrowEvalPython node, and a UDF filter
+    # over a union is pushed into every branch
+    inflect = (F.lit(True) if inflection_min_confidence is None
+               else F.coalesce(F.col("confidence")
+                               >= float(inflection_min_confidence),
+                               F.lit(False)))
+    generated = (kb_scored
+                 .withColumn("_inflect", inflect)
+                 .withColumn("_bases", _bases())
+                 .select(*_ROW_COLS)
+                 .mapInArrow(lambda it: _surface_batches(it, bool(vocative)),
+                             _SURFACE_DDL))
 
     # G10: bare surname as a *direct* entry when confidence ≥ 20 (person) /
     # ≥ 15 (fictional) and capital-dominant (KB2namelist.py:452-474).
+    persons = kb_scored.filter(F.col("type").startswith("person"))
     thresh = F.when(F.col("type") == "person:fictional", F.lit(15.0)).otherwise(F.lit(20.0))
     surname = (persons
                .withColumn("surface", F.element_at(F.split("name", " "), -1))
@@ -228,10 +209,9 @@ def build_namelist(kb_scored: DataFrame,
         [(p, None, "pronoun", True) for p in
          sorted({w for p in PRONOUNS for w in (p, p[:1].upper() + p[1:])})]
         + [(n, None, "nationality", True) for n in sorted(nationality_forms())],
-        "surface string, kb_id long, type string, is_fragment boolean")
+        _SURFACE_DDL)
 
-    all_rows = (direct.select("surface", "kb_id", "type", "is_fragment")
-                .unionByName(frag.select("surface", "kb_id", "type", "is_fragment"))
+    all_rows = (generated
                 .unionByName(surname.select("surface", "kb_id", "type", "is_fragment"))
                 .unionByName(extra))
 

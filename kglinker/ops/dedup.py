@@ -142,7 +142,7 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8,
         stats["n_candidates"] = cand.count()
     # est over the signature packed as ONE array column (r7): equal-count
     # via zip_with equality is value-identical to minhash_est_expr's
-    # 2×num_hashes-column comparison chain (tests/test_minhash_recall.py
+    # 2×num_hashes-column comparison chain (tests/test_r07_optim_parity.py
     # asserts the two forms agree), but the codegen is O(1) expressions
     # instead of O(num_hashes) renamed columns through two joins —
     # measured 2× faster end-to-end at sf0.1, and the production-64-hash

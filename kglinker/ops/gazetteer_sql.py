@@ -185,9 +185,11 @@ def doc_cooccurrence(docs: DataFrame) -> DataFrame:
 
 def doc_components(docs: DataFrame, min_weight: int = 1) -> DataFrame:
     """Connected components over the co-occurrence graph (node, comp) —
-    the CC merge step in a form DuckDB can oracle with a recursive CTE."""
-    from kglinker.graph.canonicalize import connected_components
+    the CC merge step in a form DuckDB can oracle with a recursive CTE.
+    Pairs are distinct ``subj < obj``, so the star CC's self-loop drop
+    loses no node."""
+    from kglinker.graph.canonicalize import connected_components_star
     edges = (doc_cooccurrence(docs)
              .filter(F.col("weight") >= min_weight)
              .select(F.col("subj").alias("src"), F.col("obj").alias("dst")))
-    return connected_components(edges).select("node", "comp")
+    return connected_components_star(edges).select("node", "comp")

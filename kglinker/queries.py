@@ -590,8 +590,7 @@ def q_dedup_clusters(spark, sf_dir):
     (doc_id, cluster_id, keep) where keep marks the per-cluster survivor
     (min doc_id) — the training-data dedup end product. Uses the
     large-star/small-star CC (O(log n) rounds regardless of similarity-
-    chain length — the corpus-scale algorithm; min-label stays on the
-    shallow KB-side alias graphs)."""
+    chain length)."""
     from kglinker.graph.canonicalize import connected_components_star
     from kglinker.ops.dedup import minhash_lsh_pairs
     pairs = minhash_lsh_pairs(_read_fan(spark, sf_dir, "documents"),

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from kglinker.data.transcripts import transcripts_df, transcripts_pdf
 from kglinker.graph.canonicalize import (alias_match_edges, canonical_map,
-                                         connected_components)
+                                         connected_components_star)
 from kglinker.graph.triples import build_triples
 from kglinker.jobs.pipeline import run_pipeline
 from kglinker.oracle import oracle_canonical_map, oracle_triples, precision_recall
@@ -19,7 +19,8 @@ def test_connected_components(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         "src long, dst long")
-    cc = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
+    cc = {r["node"]: r["comp"]
+          for r in connected_components_star(edges, num_partitions=4).collect()}
     assert cc[1] == cc[2] == cc[3] == 1
     assert cc[10] == cc[11] == 10
     assert cc[20] == cc[21] == cc[22] == cc[23] == 20

@@ -7,7 +7,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from kglinker.graph.canonicalize import connected_components
+from kglinker.graph.canonicalize import connected_components_star
 
 
 def test_cc_million_edge_graph(spark):
@@ -26,7 +26,7 @@ def test_cc_million_edge_graph(spark):
                       (F.col("id") * 10 + 10).alias("dst")))
     edges = stars.union(chains)
     t0 = time.time()
-    cc = connected_components(edges)
+    cc = connected_components_star(edges)
     got = (cc.groupBy("comp").count()
            .agg(F.count(F.lit(1)).alias("n_comps"),
                 F.max("count").alias("max_size"),
@@ -72,28 +72,36 @@ def test_checkpointer_single_job_per_run(spark, tmp_path):
         assert rec["n_rows_out"] == per_bucket.get(b, 0)
 
 
-def test_star_cc_equivalent_to_min_label(spark):
-    """large-star/small-star must produce the same components as min-label
-    propagation on a deterministic random-ish graph."""
-    from kglinker.graph.canonicalize import (connected_components,
-                                             connected_components_star)
+def test_star_cc_equivalent_to_union_find(spark):
+    """large-star/small-star must produce the same components as a
+    plain-Python union-find on a deterministic random-ish graph."""
     edges = (spark.range(3000)
              .select((F.xxhash64("id") % 500).alias("src"),
                      (F.xxhash64(F.col("id") + 1) % 500).alias("dst"))
              .select(F.abs("src").alias("src"), F.abs("dst").alias("dst"))
              .filter(F.col("src") != F.col("dst")))
-    a = {r["node"]: r["comp"]
-         for r in connected_components(edges, num_partitions=8).collect()}
-    b = {r["node"]: r["comp"]
-         for r in connected_components_star(edges, num_partitions=8).collect()}
-    assert a == b and len(a) > 100
+    parent: dict[int, int] = {}
+
+    def find(v: int) -> int:
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for r in edges.collect():
+        a, b = find(r["src"]), find(r["dst"])
+        parent[max(a, b)] = min(a, b)
+    want = {v: find(v) for v in list(parent)}
+    got = {r["node"]: r["comp"]
+           for r in connected_components_star(edges, num_partitions=8).collect()}
+    assert got == want and len(got) > 100
 
 
 def test_star_cc_long_path_converges_fast(spark):
     """A 2000-node path has diameter 2000: min-label would need ~2000
     rounds (it would NOT converge within its max_iter); the star
     algorithm collapses it in O(log n) rounds."""
-    from kglinker.graph.canonicalize import connected_components_star
     path = spark.range(1999).select(F.col("id").alias("src"),
                                     (F.col("id") + 1).alias("dst"))
     cc = connected_components_star(path, max_iter=20, num_partitions=8)
