@@ -5,10 +5,11 @@ Spark-native replacement for the reference's double-array-trie automaton
 ``figa/sources/main.cpp:189-210``) + POSIX-shared-memory KB
 (``SharedKB/var2/main.c:352-381``): the namelist DataFrame is collected to
 the driver (the KB is the *small* side — 10^6..10^8 surfaces vs 10^12
-turns), compiled into a char-trie, and ``sc.broadcast()`` ships exactly one
-copy per executor, resident for the application lifetime — the same
-one-copy-per-machine property the reference gets from shm, without the
-daemon (``ner_knowledge_base.py:431-506``).
+turns), compiled into a surface hash table plus a first-token length
+index, and ``sc.broadcast()`` ships exactly one copy per executor,
+resident for the application lifetime — the same one-copy-per-machine
+property the reference gets from shm, without the daemon
+(``ner_knowledge_base.py:431-506``).
 
 Matching semantics (M1/M2/M7 of SURVEY §2.5): greedy **leftmost-longest
 non-overlapping** dictionary match anchored at token starts, match end
@@ -18,20 +19,17 @@ traversal with longest-prefix backtracking and queue-clearing restart
 ``remove_shorter_entities`` (``ner_cz.py:1528-1540``). Offsets are 0-based
 character offsets, half-open — the reference's post--1-fix convention
 (``ner_cz.py:1481``).
-
-If the C-backed ``pyahocorasick`` is importable it is used for the scan
-hot loop; otherwise a pure-Python trie walk (O(tokens × max_key_len)).
 """
 
 from __future__ import annotations
 
+import heapq
 import pickle
+import re
 from dataclasses import dataclass, field
 
-try:  # optional C-accelerated scan path
-    import ahocorasick as _ahc  # type: ignore
-except Exception:  # pragma: no cover - not present in this container
-    _ahc = None
+from kglinker.extract.dates import without_zeros
+from kglinker.kb.expand import fold_accent_chars, remove_accent
 
 __all__ = ["Automaton", "Match", "KBArtifacts", "SpellIndex",
            "build_artifacts", "broadcast_artifacts", "KB_PROJECTION_COLS"]
@@ -45,11 +43,9 @@ KB_PROJECTION_COLS = ["kb_id", "type", "name", "gender", "confidence",
                       "end", "wiki_url", "country", "location",
                       "source_loc"]
 
-_PAYLOAD = "\0"  # terminal-payload key inside trie nodes (never a text char)
-
-import re as _re  # noqa: E402
-
-_TOKEN_RUN = _re.compile(r"[^\W_]+", _re.UNICODE)
+# a maximal unicode-alphanumeric run: [^\W_] ≡ str.isalnum, so token
+# starts and the match-end boundary check agree for every script
+_TOKEN_RUN = re.compile(r"[^\W_]+", re.UNICODE)
 
 
 @dataclass(frozen=True)
@@ -61,63 +57,29 @@ class Match:
     is_fragment: bool
 
 
-def _is_word(c: str) -> bool:
-    return c.isalnum()
-
-
 class Automaton:
-    """Char-trie over namelist surfaces with (kb_ids, is_fragment) payloads."""
-
-    # first-token probe lists longer than this fall back to the trie walk
-    # (bounds per-token work on hot first tokens at reference-scale
-    # dictionaries, where e.g. "New ..." may head thousands of surfaces)
-    _MAX_PROBES = 64
+    """Namelist surfaces → (kb_ids, is_fragment) payloads, with a
+    first-token → surface-lengths index for the scan."""
 
     def __init__(self, entries: dict[str, tuple[tuple[int, ...], bool]]):
         """``entries`` may be a dict OR any iterable of (surface, payload)
         pairs — the iterable form is the streamed >30M-surface build path
-        (fed from ``toLocalIterator``, never materializing a row list):
-        surfaces insert incrementally and only the trie + payload dict
-        live on the driver."""
-        self._root: dict = {}
-        self._entries: dict[str, tuple[tuple[int, ...], bool]] = {}
-        # first-token index: the scan hot loop probes `text.startswith`
-        # (C speed) over length-descending candidates — measured 1.8×
-        # faster than the pure-python trie walk; the trie remains for
-        # long probe lists, autocomplete and exact lookups
-        self._by_first: dict[str, list[str]] = {}
-        items = entries.items() if isinstance(entries, dict) else entries
-        for surface, payload in items:
-            self._add(surface, payload)
-        self._finalize()
-
-    def _add(self, surface: str, payload: tuple[tuple[int, ...], bool]) -> None:
-        """Construction-time insert (idempotent per surface: last payload
-        wins, matching dict-comprehension semantics of the batch path).
-        Private on purpose (r3 advice): inserting after ``_finalize``
-        would leave ``_by_first`` probe lists unsorted (breaking
-        leftmost-longest matching) and the compiled ``_ahc`` automaton
-        stale — only ``__init__`` may call this."""
-        node = self._root
-        for ch in surface:
-            node = node.setdefault(ch, {})
-        node[_PAYLOAD] = payload
-        if surface not in self._entries:
+        (fed from ``toLocalIterator``, never materializing a row list).
+        On duplicate surfaces the last payload wins (dict semantics)."""
+        self._entries: dict[str, tuple[tuple[int, ...], bool]] = dict(entries)
+        # first token → the distinct lengths of the surfaces it heads,
+        # longest first. Only one surface of a given length can start at
+        # a text offset, so probing these lengths in order is the
+        # leftmost-longest match, however many surfaces share the token.
+        lengths: dict[str, set[int]] = {}
+        for surface in self._entries:
             m = _TOKEN_RUN.match(surface)
-            self._by_first.setdefault(
-                m.group(0) if m else surface, []).append(surface)
-        self._entries[surface] = payload
-
-    def _finalize(self) -> None:
-        for lst in self._by_first.values():
-            lst.sort(key=len, reverse=True)
-        self._ahc = None
-        if _ahc is not None:
-            a = _ahc.Automaton()
-            for s, p in self._entries.items():
-                a.add_word(s, (len(s), p))
-            a.make_automaton()
-            self._ahc = a
+            # a surface that does not start on a token can never match
+            if m is not None:
+                lengths.setdefault(m.group(0), set()).add(len(surface))
+        self._lengths: dict[str, tuple[int, ...]] = {
+            tok: tuple(sorted(ls, reverse=True))
+            for tok, ls in lengths.items()}
 
     def __len__(self) -> int:
         return len(self._entries)
@@ -137,33 +99,15 @@ class Automaton:
     # -- M1: token starts (offsets in unicode chars, figa_cedar.tpp:941-1013)
     @staticmethod
     def token_starts(text: str) -> list[int]:
-        # regex alnum-run scan (C speed); [^\W_] ≡ unicode alphanumeric,
-        # matching the _is_word boundary checks for all scripts in scope
         return [m.start() for m in _TOKEN_RUN.finditer(text)]
 
     def autocomplete(self, prefix: str, limit: int = 10) -> list[tuple[str, tuple]]:
         """M5 (figa ``-a``, figa/README:5): dictionary surfaces extending
-        ``prefix``, lexicographic, with their (kb_ids, is_fragment)
-        payloads. Trie walk + bounded DFS; interactive-path helper, not a
-        data-path operator."""
-        node = self._root
-        for ch in prefix:
-            node = node.get(ch)
-            if node is None:
-                return []
-        out: list[tuple[str, tuple]] = []
-
-        def dfs(n: dict, acc: str) -> None:
-            if len(out) >= limit:
-                return
-            payload = n.get(_PAYLOAD)
-            if payload is not None:
-                out.append((prefix + acc, payload))
-            for ch in sorted(k for k in n if k != _PAYLOAD):
-                dfs(n[ch], acc + ch)
-
-        dfs(node, "")
-        return out[:limit]
+        ``prefix``, in code-point order, with their (kb_ids, is_fragment)
+        payloads. Interactive-path helper, not a data-path operator."""
+        hits = heapq.nsmallest(
+            limit, (s for s in self._entries if s.startswith(prefix)))
+        return [(s, self._entries[s]) for s in hits]
 
     def find_matches(self, text: str) -> list[Match]:
         """Leftmost-longest non-overlapping dictionary matches (M2+M7)."""
@@ -171,62 +115,22 @@ class Automaton:
         out: list[Match] = []
         pos = 0
         entries = self._entries
-        by_first = self._by_first
+        lengths = self._lengths
         for tok in _TOKEN_RUN.finditer(text):
             s = tok.start()
             if s < pos:
                 continue  # inside an accepted match: non-overlap restart
-            probes = by_first.get(tok.group(0))
-            if probes is None:
-                continue
-            if len(probes) <= self._MAX_PROBES:
-                # longest-first startswith probes ≡ trie longest match
-                for surf in probes:
-                    e = s + len(surf)
-                    if e <= n and text.startswith(surf, s) \
-                            and (e == n or not _is_word(text[e])):
-                        ids, frag = entries[surf]
-                        out.append(Match(s, e, surf, ids, frag))
-                        pos = e
-                        break
-            else:
-                m = self._trie_match_at(text, s, n)
-                if m is not None:
-                    out.append(m)
-                    pos = m.end
+            for length in lengths.get(tok.group(0), ()):
+                e = s + length
+                if e > n or (e < n and text[e].isalnum()):
+                    continue  # the match must end on a token boundary
+                surface = text[s:e]
+                payload = entries.get(surface)
+                if payload is not None:
+                    out.append(Match(s, e, surface, *payload))
+                    pos = e
+                    break
         return out
-
-    def _trie_match_at(self, text: str, s: int, n: int) -> "Match | None":
-        node = self._root
-        best_end = -1
-        best_payload = None
-        j = s
-        while j < n:
-            node = node.get(text[j])
-            if node is None:
-                break
-            j += 1
-            payload = node.get(_PAYLOAD)
-            if payload is not None and (j == n or not _is_word(text[j])):
-                best_end, best_payload = j, payload
-        if best_payload is None:
-            return None
-        return Match(s, best_end, text[s:best_end],
-                     best_payload[0], best_payload[1])
-
-
-def _strip_acc(s: str) -> str:
-    from kglinker.kb.expand import remove_accent
-    return remove_accent(s)
-
-
-def _fold_acc(s: str) -> str:
-    """Length-preserving per-char accent fold — the accent-variant
-    automaton keys and the matcher's scan view both use THIS transform,
-    so accent-insensitive matching never silently degrades on
-    length-changing decompositions (r2 verdict demand #7)."""
-    from kglinker.kb.expand import fold_accent_chars
-    return fold_accent_chars(s)
 
 
 def _edit1(a: str, b: str) -> bool:
@@ -370,13 +274,6 @@ def build_artifacts(kb_scored_rows,
                         bool(r["is_fragment"])))
         for r in namelist_rows)
     entries = automaton.entries
-    def _wz(d: str | None) -> str:
-        """showWithoutZeros (reference dates.py:50-64): '1920-00-00'→'1920'."""
-        parts = (d or "").split("-")
-        while parts and parts[-1] == "00":
-            parts.pop()
-        return "-".join(parts)
-
     meta: dict[int, dict] = {}
     for r in kb_scored_rows:
         def _multi(key: str) -> tuple[str, ...]:
@@ -394,10 +291,11 @@ def build_artifacts(kb_scored_rows,
             "confidence": float(r.get("confidence") or 0.0),
             "nationality": _multi("nationality"),
             "jobs": _multi("jobs"),
-            "person_dates": tuple(_wz(r.get(k)) for k in
+            "person_dates": tuple(without_zeros(r.get(k)) for k in
                                   ("date_of_birth", "date_of_death")
                                   if r.get(k)),
-            "org_dates": tuple(_wz(r.get(k)) for k in org_fields if r.get(k)),
+            "org_dates": tuple(without_zeros(r.get(k)) for k in org_fields
+                               if r.get(k)),
             "wiki_url": r.get("wiki_url") or "",
             "country": r.get("country") or "",
             "location": r.get("location") or "",
@@ -406,7 +304,7 @@ def build_artifacts(kb_scored_rows,
     sub = {r["subname"]: tuple(int(i) for i in r["kb_ids"]) for r in subname_rows}
     sub_folded: dict[str, tuple[int, ...]] = {}
     for k in sorted(sub):
-        fk = _strip_acc(k).lower()
+        fk = remove_accent(k).lower()
         prev = sub_folded.get(fk, ())
         sub_folded[fk] = prev + tuple(i for i in sub[k] if i not in prev)
     pron_m = frozenset({p for b in PRONOUNS_MALE for p in (b, b[:1].upper() + b[1:])})
@@ -421,8 +319,9 @@ def build_artifacts(kb_scored_rows,
         lower_automaton=(Automaton(_transformed_entries(entries, str.lower))
                          if lowercase else None),
         spell_index=SpellIndex(entries) if spellcheck else None,
-        accent_automaton=(Automaton(_transformed_entries(entries, _fold_acc))
-                          if strip_accents else None),
+        accent_automaton=(Automaton(
+            _transformed_entries(entries, fold_accent_chars))
+            if strip_accents else None),
         subname_map_folded=sub_folded,
         uri_automaton=(Automaton(
             (r["surface"], (tuple(int(i) for i in (r["kb_ids"] or [])),
@@ -441,8 +340,8 @@ def broadcast_artifacts(spark, kb_scored, namelist, subnames,
     - ``streamed=False`` (default): plain ``collect()`` — fastest below
       ~30M surfaces (measured 118 MB payload at 1.3M surfaces).
     - ``streamed=True``: ``toLocalIterator(prefetchPartitions=True)``
-      feeds the trie/meta/subname structures row-by-row, so the driver
-      never materializes a row list next to the compiled automaton —
+      feeds the surface dict, meta and subname structures row-by-row, so
+      no row list is ever materialized next to the compiled automaton —
       the >30M-surface build path (BENCH/BASELINE.md §automaton); peak
       headroom verified in tests/test_streamed_build.py. The broadcast
       call is identical.

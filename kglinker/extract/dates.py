@@ -45,7 +45,7 @@ from dataclasses import dataclass
 
 from kglinker.data.wordlists import CZECH_MONTHS
 
-__all__ = ["DateMatch", "find_dates", "iso"]
+__all__ = ["DateMatch", "find_dates", "iso", "without_zeros"]
 
 ENGLISH_MONTHS = {
     "january": 1, "jan": 1, "february": 2, "feb": 2, "march": 3, "mar": 3,
@@ -128,6 +128,14 @@ class DateMatch:
 def iso(y: int, m: int = 0, d: int = 0) -> str:
     """Zero-padded ISO with 00 for unknown parts (dates.py:50-64)."""
     return f"{y:04d}-{m:02d}-{d:02d}"
+
+
+def without_zeros(d: str | None) -> str:
+    """showWithoutZeros (reference dates.py:50-64): '1920-00-00' → '1920'."""
+    parts = (d or "").split("-")
+    while parts and parts[-1] == "00":
+        parts.pop()
+    return "-".join(parts)
 
 
 def _valid(y: int, m: int, d: int) -> bool:

@@ -3,7 +3,7 @@
 This is the engine's single UDF family (SURVEY §2.10): the whole
 per-document pipeline of ``/root/reference/ner_cz.py:1542-1678``
 (``recognize()``) re-expressed as one pure function over an ordered list of
-turns, executed distributed via ``mapInPandas`` grouped by ``conv_id``.
+turns, executed distributed via ``mapInArrow`` grouped by ``conv_id``.
 Grouped processing is *required* — not a compromise — because the
 reference's D5/D7/D8 semantics are order-dependent within a document:
 later mentions see earlier disambiguation choices (``ner_cz.py:402-408``),
@@ -46,8 +46,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-from kglinker.automaton.build import KBArtifacts
-from kglinker.extract.dates import find_dates
+from kglinker.automaton.build import _TOKEN_RUN, KBArtifacts
+from kglinker.extract.dates import find_dates, without_zeros
 
 __all__ = ["MentionRow", "annotate_conversation", "MENTIONS_SCHEMA_DDL"]
 
@@ -57,7 +57,6 @@ MENTIONS_SCHEMA_DDL = (
 )
 
 _SANITIZE = re.compile(r"[;\x00-\x1f]")
-_TOKEN_RUN = re.compile(r"[^\W_]+", re.UNICODE)
 
 
 def _sanitize(text: str) -> str:
@@ -187,13 +186,7 @@ def _mention_dates(resolved: str, kind: str) -> list[str]:
     """showWithoutZeros forms of a date/interval mention's endpoints
     (Context build, ner_cz.py:749-756)."""
     parts = resolved.split("--") if kind == "interval" else [resolved]
-    out = []
-    for p in parts:
-        comps = p.split("-")
-        while comps and comps[-1] == "00":
-            comps.pop()
-        out.append("-".join(comps))
-    return out
+    return [without_zeros(p) for p in parts]
 
 
 class _ConvContext:

@@ -6,7 +6,8 @@ production build chain at local[*]: score_kb → build_namelist →
 build_subname_map → build_artifacts (+ payload size). This is the
 one-off-per-KB-snapshot cost the corpus side amortizes; re-run after any
 surface-generation change (the G8 generator materially changes the
-surface count) so the documented numbers track the code:
+surface count) so the documented numbers track the code. ``unpickle_sec``
+is the per-worker cost of loading the broadcast payload:
 
     PYTHONPATH=/root/repo KB_PROBE_ROWS=200000 python -m kglinker.jobs.kb_scale_probe
 """
@@ -15,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import pickle
 import time
 
 _GIVEN = ["Jan", "Petr", "Karel", "Tomáš", "Josef", "Václav", "Antonín",
@@ -86,14 +88,19 @@ def main() -> None:
         (r.asDict() for r in nl.toLocalIterator(prefetchPartitions=True)),
         (r.asDict() for r in sub.toLocalIterator(prefetchPartitions=True)))
     t_compile = time.time() - t0
-    payload_mb = len(art.dumps()) / 1e6
+    payload = art.dumps()
+    payload_mb = len(payload) / 1e6
+    t0 = time.time()
+    pickle.loads(payload)
+    t_unpickle = time.time() - t0
 
     print(json.dumps({
         "kb_rows": n, "score_sec": round(t_score, 1),
         "namelist_sec": round(t_namelist, 1), "n_surfaces": n_surfaces,
         "subnames_sec": round(t_sub, 1), "n_subnames": n_sub,
         "compile_sec": round(t_compile, 1),
-        "payload_mb": round(payload_mb, 1)}))
+        "payload_mb": round(payload_mb, 1),
+        "unpickle_sec": round(t_unpickle, 2)}))
 
 
 if __name__ == "__main__":

@@ -9,7 +9,7 @@ Reimplemented here with different algorithms/data structures than
 - A3/A4 static scoring: plain-python per-type maxima + weighted means
   (vs the engine's Window expressions);
 - M1/M2/M7 matching: first-token surface index + ``str.startswith`` probes
-  (vs the engine's char-trie / Aho-Corasick walk);
+  (vs the engine's first-token length index + surface-dict lookups);
 - D2–D9 disambiguation/coreference: an independent rewrite of the
   reference semantics (ner_cz.py) as one flat function.
 

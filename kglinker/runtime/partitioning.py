@@ -31,10 +31,9 @@ __all__ = ["salted_count", "salted_agg_sum", "repartition_by_conv", "fan_out"]
 _SCAN_SAFE_NODES = frozenset(
     {"Relation", "LogicalRDD", "Range", "Project", "Filter",
      "SubqueryAlias", "DeduplicateWithinWatermark",
-     # r7 ADVICE: legitimate leaf sources that used to hard-fail —
-     # createDataFrame scans and cached scans are as probe-safe as a
-     # parquet Relation (no exchange can exist below a leaf)
-     "LocalRelation", "InMemoryRelation"})
+     # a pandas createDataFrame leaf. A cached frame needs no entry: the
+     # analyzed plan still shows its source nodes, never InMemoryRelation
+     "LocalRelation"})
 
 
 def _assert_scan_site(df: DataFrame) -> None:

@@ -51,3 +51,42 @@ def test_fan_out_rejects_mid_pipeline_call(spark):
     # filter/project over the scan remain allowed
     assert fan_out(docs.filter(F.col("doc_id") >= 0)
                    .select("doc_id", "text")).count() == docs.count()
+
+
+def test_fan_out_accepts_created_frames(spark):
+    """createDataFrame leaves: a pandas input analyzes to LocalRelation,
+    a row list to LogicalRDD — both are scan sites."""
+    import pandas as pd
+
+    pdf = pd.DataFrame({"id": range(40), "t": ["x"] * 40})
+    for df in (spark.createDataFrame(pdf),
+               spark.createDataFrame(list(pdf.itertuples(index=False)),
+                                     "id long, t string")):
+        out = fan_out(df, min_parts=4)
+        assert out.rdd.getNumPartitions() >= 4
+        assert sorted(r.id for r in out.collect()) == list(range(40))
+
+
+def test_fan_out_on_cached_scan(spark, tmp_path):
+    """A cached parquet scan still analyzes to its Relation leaf, so it
+    fans out; a cached aggregate still analyzes to its Aggregate and is
+    rejected like the uncached one."""
+    import pytest
+
+    path = str(tmp_path / "docs")
+    spark.range(0, 500, 1, 1).withColumn("lang", F.col("id") % 3) \
+        .write.parquet(path)
+    docs = spark.read.parquet(path).cache()
+    agged = docs.groupBy("lang").count().cache()
+    try:
+        n = docs.count()
+        agged.count()
+        fanned = fan_out(docs)
+        assert fanned.rdd.getNumPartitions() >= \
+            spark.sparkContext.defaultParallelism
+        assert fanned.count() == n
+        with pytest.raises(ValueError, match="SCAN site"):
+            fan_out(agged)
+    finally:
+        agged.unpersist()
+        docs.unpersist()

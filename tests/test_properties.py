@@ -69,24 +69,96 @@ def _bind_artifacts(artifacts):
     (hypothesis can't take pytest fixtures directly)."""
     test_match_offsets_and_nonoverlap.art = artifacts
     test_annotation_deterministic_and_valid.art = artifacts
-    test_token_index_equals_trie_walk.art = artifacts
 
 
-@settings(max_examples=50, deadline=None)
-@given(texts())
-def test_token_index_equals_trie_walk(text):
-    """The startswith-probe scan and the trie walk are the same function
-    (the probe path is the default; the trie is the hot-first-token
-    fallback) — forced head-to-head on random text."""
+# surfaces and texts over a small token pool: "New" heads most surfaces
+# (a hot first token), and separators include "_" and "-", which end a
+# token without being whitespace
+_POOL = ["New", "New", "New", "York", "Yorker", "City", "Hall", "Praha",
+         "Ústí", "n", "1920"]
+_SEPS = [" ", " ", "-", ". ", "_", "/"]
+
+
+@st.composite
+def _phrases(draw, max_tokens):
+    toks = draw(st.lists(st.sampled_from(_POOL), min_size=1,
+                         max_size=max_tokens))
+    out = toks[0]
+    for t in toks[1:]:
+        out += draw(st.sampled_from(_SEPS)) + t
+    return out
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.dictionaries(_phrases(4), st.tuples(
+           st.tuples(st.integers(1, 9)), st.booleans()),
+           min_size=1, max_size=40),
+       st.lists(st.one_of(_phrases(6), st.sampled_from(["x", ",", "Newx"])),
+                max_size=12))
+def test_find_matches_equals_oracle_scan(entries, words):
+    """The engine scan equals the independent oracle's startswith probe
+    scan on random dictionaries that share a hot first token."""
     from kglinker.automaton.build import Automaton
-    art = test_token_index_equals_trie_walk.art
-    auto = art.automaton
-    old = Automaton._MAX_PROBES
-    try:
-        Automaton._MAX_PROBES = 10 ** 9
-        via_index = auto.find_matches(text)
-        Automaton._MAX_PROBES = -1
-        via_trie = auto.find_matches(text)
-    finally:
-        Automaton._MAX_PROBES = old
-    assert via_index == via_trie
+    from kglinker.oracle_matcher import OracleLinker
+    text = " ".join(words)
+    oracle = OracleLinker([], [
+        dict(surface=k, kb_ids=list(ids), is_fragment=frag)
+        for k, (ids, frag) in entries.items()], [])
+    got = [(m.start, m.end, m.surface, m.kb_ids, m.is_fragment)
+           for m in Automaton(entries).find_matches(text)]
+    assert got == oracle._scan(text)
+
+
+def _brute_force_scan(entries: dict, text: str) -> list[tuple]:
+    """Leftmost-longest non-overlapping matches by trying every surface
+    at every token start."""
+    out, pos, n = [], 0, len(text)
+    for s in range(n):
+        if s < pos or not text[s].isalnum() \
+                or (s > 0 and text[s - 1].isalnum()):
+            continue
+        hits = [k for k in entries if text.startswith(k, s)
+                and (s + len(k) == n or not text[s + len(k)].isalnum())]
+        if hits:
+            k = max(hits, key=len)
+            out.append((s, s + len(k), k) + entries[k])
+            pos = s + len(k)
+    return out
+
+
+def _hot_token_entries() -> dict:
+    """12,000 surfaces headed by "New", plus nested prefixes."""
+    entries = {f"New Town {i:05d}": ((i,), False) for i in range(12000)}
+    for i, k in enumerate(["New", "New York", "New York City",
+                           "New York City Hall", "New Town"]):
+        entries[k] = ((20000 + i,), i == 0)
+    return entries
+
+
+def _uri_entries() -> dict:
+    """Hundreds of URIs share the first token "https", and a prefix URI
+    must not shadow a longer one."""
+    entries = {f"https://w.example/E{i:04d}": ((i,), False)
+               for i in range(300)}
+    entries["https://w.example/E0007/extra"] = ((999,), False)
+    return entries
+
+
+@pytest.mark.parametrize("entries, text, surfaces", [
+    (_hot_token_entries(),
+     "New York City Hall, New York Cityx, New Town 00042 and New Town "
+     "000421 or New Town 11999; New-York New Yorker New",
+     ["New York City Hall", "New York", "New Town 00042", "New Town",
+      "New Town 11999", "New", "New", "New"]),
+    (_uri_entries(),
+     "viz https://w.example/E0007/extra a https://w.example/E0123 . "
+     "https://w.example/E01234 https://w.example/E0299/",
+     ["https://w.example/E0007/extra", "https://w.example/E0123",
+      "https://w.example/E0299"]),
+], ids=["hot_first_token", "https_uris"])
+def test_hot_first_token_matches_brute_force(entries, text, surfaces):
+    from kglinker.automaton.build import Automaton
+    got = [(m.start, m.end, m.surface, m.kb_ids, m.is_fragment)
+           for m in Automaton(entries).find_matches(text)]
+    assert got == _brute_force_scan(entries, text)
+    assert [g[2] for g in got] == surfaces
