@@ -4,9 +4,9 @@
 #
 #   ./jobs/submit.sh <master> <n_convs> <workdir> [extra spark-submit args]
 #
-# Local sandbox equivalent used for the recorded evidence:
-#   SPARK_GRAFT_CPUS=8  python -m kglinker.jobs.scaling_bench
-#   SPARK_GRAFT_CPUS=32 python -m kglinker.jobs.scaling_bench
+# Local equivalent (compare turns_per_sec across the two levels):
+#   SPARK_GRAFT_CPUS=8  SPARK_GRAFT_CONVS=300000 python bench.py
+#   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_CONVS=300000 python bench.py
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MASTER="${1:?master url (e.g. yarn, spark://..., local[32])}"

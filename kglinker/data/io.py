@@ -15,7 +15,7 @@ Scale notes: parquet/Iceberg are the only formats that carry pushdown +
 column pruning to the scan; JSONL/CSV are full-scan text formats (every
 reader here is one `spark.read` — Spark parallelizes by file split
 either way) and a 100 TB pipeline should land them into
-parquet/Iceberg once (`land_*` below) rather than re-parse per query.
+parquet/Iceberg once rather than re-parse per query.
 """
 
 from __future__ import annotations
@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 from kglinker.data.transcripts import TRANSCRIPTS_SCHEMA
 
-__all__ = ["read_transcripts", "read_documents", "land_table",
-           "DOCUMENTS_DDL", "TRANSCRIPTS_DDL"]
+__all__ = ["read_transcripts", "read_documents", "DOCUMENTS_DDL",
+           "TRANSCRIPTS_DDL"]
 
 TRANSCRIPTS_DDL = [(f.name, f.dataType.simpleString())
                    for f in TRANSCRIPTS_SCHEMA.fields]
@@ -84,23 +84,3 @@ def read_documents(spark: SparkSession, path: str,
     """Canonical (doc_id, text, lang, source, n_chars) from any
     supported source."""
     return _read(spark, path, fmt, DOCUMENTS_DDL, "documents", **options)
-
-
-def land_table(df: DataFrame, dest: str, partition_by: str | None = None,
-               buckets: int | None = None,
-               bucket_col: str | None = None) -> None:
-    """One-time landing of a text-format source into parquet (Iceberg on
-    a cluster: same writer API with ``format('iceberg')``): column-pruned
-    scans + pushdown from then on. Optional hive-style partitioning and
-    bucketing (``bucketBy`` requires ``saveAsTable``; that variant writes
-    into the session warehouse under name ``dest``)."""
-    if buckets:
-        (df.write.mode("overwrite")
-           .bucketBy(buckets, bucket_col or "conv_id")
-           .sortBy(bucket_col or "conv_id")
-           .format("parquet").saveAsTable(dest))
-        return
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(dest)

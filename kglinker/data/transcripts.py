@@ -22,7 +22,6 @@ from datetime import datetime, timedelta
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 TRANSCRIPTS_SCHEMA = T.StructType([
@@ -182,12 +181,3 @@ def transcripts_df(spark: SparkSession, n_convs: int, seed: int = 42,
 
     ids = spark.range(0, n_convs).repartition(partitions)
     return ids.mapInPandas(expand, TRANSCRIPTS_SCHEMA)
-
-
-def write_transcripts(spark: SparkSession, path: str, n_convs: int,
-                      seed: int = 42, partitions: int | None = None) -> None:
-    """Materialize as parquet (stand-in for the Iceberg transcripts table;
-    on a cluster this is ``df.writeTo('transcripts')`` partitioned by
-    ``bucket(conv_id)`` + ``days(ts)``)."""
-    df = transcripts_df(spark, n_convs, seed, partitions)
-    df.withColumn("ts", F.col("ts").cast("timestamp")).write.mode("overwrite").parquet(path)

@@ -8,7 +8,7 @@ conversations in one Python call. Two ways to get that in Spark:
   tiny (~7 turns) so per-group overhead dominates (measured 2× slower than
   single-core Python at sf0.01).
 - **chosen**: ``repartition(conv_id) → sortWithinPartitions(conv_id,
-  turn_idx) → mapInPandas`` — one Python call per Arrow batch (thousands
+  turn_idx) → mapInArrow`` — one Python call per Arrow batch (thousands
   of conversations), with a carry-over buffer for the conversation that
   straddles a batch boundary. Hash partitioning guarantees a conversation
   never straddles a *partition* boundary, so the carry is always resolved

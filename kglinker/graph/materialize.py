@@ -20,11 +20,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["write_graph", "read_edges", "entity_table",
-           "merged_entity_table", "MULTI_VALUED_COLS"]
+__all__ = ["write_graph", "entity_table", "merged_entity_table",
+           "MULTI_VALUED_COLS"]
 
 # |-delimited multi-valued KB columns (HEAD-KB "MULTIPLE VALUES" flag)
 MULTI_VALUED_COLS = ("aliases", "redirects", "jobs", "nationality")
@@ -104,7 +104,3 @@ def write_graph(triples: DataFrame, entities: DataFrame, base: str) -> None:
         os.path.join(base, "edges"))
     entities.write.mode("overwrite").partitionBy("entity_type").parquet(
         os.path.join(base, "entities"))
-
-
-def read_edges(spark: SparkSession, base: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(base, "edges"))

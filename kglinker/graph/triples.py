@@ -27,8 +27,8 @@ from pyspark.storagelevel import StorageLevel
 
 from kglinker.runtime.partitioning import salted_count
 
-__all__ = ["mention_entities", "entity_dim_triples", "cooccurrence_triples",
-           "build_triples"]
+__all__ = ["mention_entities", "conversation_pairs", "entity_dim_triples",
+           "cooccurrence_triples", "build_triples"]
 
 
 def mention_entities(mentions: DataFrame) -> DataFrame:
@@ -38,6 +38,24 @@ def mention_entities(mentions: DataFrame) -> DataFrame:
             .filter(F.col("mention_type").isin("kb", "coref")
                     & F.col("kb_id").isNotNull())
             .select("conv_id", "kb_id"))
+
+
+def conversation_pairs(ents: DataFrame) -> DataFrame:
+    """(conv_id, subj, obj): each distinct entity pair of a conversation
+    once, ``subj < obj`` as kb_ids, from (conv_id, kb_id) rows. Pairs are
+    generated inside the row from the per-conversation sorted entity set
+    (small, ≤ dozens): one groupBy(conv_id) shuffle + array expansion
+    instead of a sort-merge self-join. Shared by the batch edges and the
+    streaming edge-weight deltas."""
+    per_conv = (ents.groupBy("conv_id")
+                .agg(F.sort_array(F.collect_set("kb_id")).alias("es")))
+    es = F.col("es")
+    return (per_conv.select("conv_id", F.explode(F.flatten(F.transform(
+                es, lambda x, i: F.transform(
+                    F.slice(es, i + 2, F.size(es)),
+                    lambda y: F.struct(x.cast("string").alias("subj"),
+                                       y.cast("string").alias("obj")))))).alias("p"))
+            .select("conv_id", "p.subj", "p.obj"))
 
 
 def entity_dim_triples(kb_scored: DataFrame, canon: DataFrame | None = None) -> DataFrame:
@@ -85,30 +103,24 @@ def cooccurrence_triples(mentions: DataFrame,
     attach a map-side join over the cached pairs (zero pair shuffles).
     Above the threshold (KB²-scale edge sets) the plain shuffle join +
     AQE skew split remains. Measured sf0.1: the attach join 1.9 s → map-
-    side; kg_pipeline_triples wall 3.5 → ~2 s."""
+    side; kg_pipeline_triples wall 3.5 → ~2 s.
+
+    Eager: building the returned frame already runs two Spark jobs over
+    the whole upstream — the weight checkpoint and its count — so the
+    extraction behind ``mentions`` executes here, not when the edges are
+    written. ``pairs`` is persisted and stays persisted."""
     ents = mention_entities(mentions)
     if canon is not None:
         ents = (ents.join(F.broadcast(canon), "kb_id", "left")
                     .withColumn("kb_id", F.coalesce("canon_id", "kb_id"))
                     .drop("canon_id"))
-    # pairs generated inside the row from the per-conversation sorted
-    # entity set (small, ≤ dozens): one groupBy(conv_id) shuffle + array
-    # expansion instead of a sort-merge self-join
-    per_conv = (ents.groupBy("conv_id")
-                .agg(F.sort_array(F.collect_set("kb_id")).alias("es")))
-    es = F.col("es")
     # persist: pairs feeds BOTH the weight aggregation and the final edge
-    # join — without it the whole upstream lineage (at 100 TB: the
-    # mapInPandas extraction over the full corpus) evaluates twice. Pairs
-    # are orders of magnitude smaller than the corpus (distinct entity
-    # pairs per conversation), so MEMORY_AND_DISK is cheap insurance.
-    pairs = (per_conv.select("conv_id", F.explode(F.flatten(F.transform(
-                es, lambda x, i: F.transform(
-                    F.slice(es, i + 2, F.size(es)),
-                    lambda y: F.struct(x.cast("string").alias("subj"),
-                                       y.cast("string").alias("obj")))))).alias("p"))
-             .select("conv_id", "p.subj", "p.obj")
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    # join — without it the upstream lineage (the mentions scan, or the
+    # mapInArrow extraction when called on unmaterialized mentions) plus
+    # the groupBy(conv_id) shuffle evaluates twice. Pairs are orders of
+    # magnitude smaller than the corpus (distinct entity pairs per
+    # conversation), so MEMORY_AND_DISK is cheap insurance.
+    pairs = conversation_pairs(ents).persist(StorageLevel.MEMORY_AND_DISK)
     # weight via the salted two-stage agg (hot pairs spread over salts);
     # materialize + count the per-edge aggregate (tiny: one row per
     # distinct edge) to DECIDE the join strategy at the driver — see
@@ -126,6 +138,8 @@ def cooccurrence_triples(mentions: DataFrame,
 
 def build_triples(mentions: DataFrame, kb_scored: DataFrame,
                   canon: DataFrame | None = None) -> DataFrame:
-    """Full triple set: dims ∪ co-occurrence edges."""
+    """Full triple set: dims ∪ co-occurrence edges. Eager like
+    :func:`cooccurrence_triples`: the weight checkpoint and count run
+    when this frame is built, and its persisted ``pairs`` stay cached."""
     return (entity_dim_triples(kb_scored, canon)
             .unionByName(cooccurrence_triples(mentions, canon)))

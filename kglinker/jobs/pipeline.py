@@ -1,6 +1,6 @@
 """End-to-end KG construction job (SURVEY §3.1/§3.2 re-expressed).
 
-    transcripts ──repartition(conv_id)──▶ extract_mentions (applyInPandas,
+    transcripts ──repartition(conv_id)──▶ extract_mentions (mapInArrow,
         broadcast automaton) ──▶ mentions [per-bucket lineage checkpoints]
     kb ──▶ score ──▶ namelist/subnames ──▶ automaton (broadcast)
     kb ──▶ K2/K3 edges ──▶ connected components ──▶ canon map (broadcast)

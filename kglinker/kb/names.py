@@ -55,12 +55,19 @@ def _gen_subnames(name: pd.Series) -> pd.Series:
     return pd.Series([X.subnames(n) for n in name])
 
 
+def _p3(s: F.Column) -> F.Column:
+    """P3 (KB2namelist.py:207,408-410): drop zero-width characters,
+    collapse whitespace runs to one space, trim. Column expressions on
+    purpose: Java ``\\s`` and Spark ``trim`` are the namelist's
+    definition of whitespace, not Python's."""
+    return F.trim(F.regexp_replace(
+        F.regexp_replace(s, "[\u200b\u200c\u200d\ufeff]", ""), r"\s+", " "))
+
+
 def _bases() -> F.Column:
     """P1: NAME + ALIASES + REDIRECTS as one array of surface forms, with
     ``#lang=``/``#ntype=`` tags stripped (KB2namelist.py:146-165),
-    whitespace normalized (P3) and empty forms dropped. Column
-    expressions on purpose: Java ``\\s`` and Spark ``trim`` are the
-    namelist's definition of whitespace, not Python's."""
+    whitespace normalized (P3) and empty forms dropped."""
     surfaces = F.array_union(
         F.array(F.col("name")),
         F.array_union(
@@ -68,8 +75,8 @@ def _bases() -> F.Column:
             F.split(F.coalesce(F.col("redirects"), F.lit("")), r"\|"),
         ),
     )
-    clean = F.transform(surfaces, lambda s: F.trim(F.regexp_replace(
-        F.regexp_replace(s, r"#(?:lang|ntype)=[^#|]*", ""), r"\s+", " ")))
+    clean = F.transform(surfaces, lambda s: _p3(
+        F.regexp_replace(s, r"#(?:lang|ntype)=[^#|]*", "")))
     return F.filter(clean, lambda s: s != "")
 
 
@@ -167,6 +174,9 @@ def build_namelist(kb_scored: DataFrame,
     the vocative case ("Jane Nováku"), matching the reference namegen's
     grammar output; the default keeps the surface set byte-stable.
     """
+    # G1–G10 read the P3-normalized NAME: a padded or zero-width name
+    # must not leave a stray whole-name fragment or an empty surname
+    kb = kb_scored.withColumn("name", _p3(F.col("name")))
     # G1–G9 in one Python boundary per KB partition: separate scalar
     # UDFs would each plan as an ArrowEvalPython node, and a UDF filter
     # over a union is pushed into every branch
@@ -174,7 +184,7 @@ def build_namelist(kb_scored: DataFrame,
                else F.coalesce(F.col("confidence")
                                >= float(inflection_min_confidence),
                                F.lit(False)))
-    generated = (kb_scored
+    generated = (kb
                  .withColumn("_inflect", inflect)
                  .withColumn("_bases", _bases())
                  .select(*_ROW_COLS)
@@ -183,7 +193,7 @@ def build_namelist(kb_scored: DataFrame,
 
     # G10: bare surname as a *direct* entry when confidence ≥ 20 (person) /
     # ≥ 15 (fictional) and capital-dominant (KB2namelist.py:452-474).
-    persons = kb_scored.filter(F.col("type").startswith("person"))
+    persons = kb.filter(F.col("type").startswith("person"))
     thresh = F.when(F.col("type") == "person:fictional", F.lit(15.0)).otherwise(F.lit(20.0))
     surname = (persons
                .withColumn("surface", F.element_at(F.split("name", " "), -1))
@@ -271,7 +281,8 @@ def build_subname_map(kb_scored: DataFrame) -> DataFrame:
     persons = kb_scored.filter(F.col("type").startswith("person"))
     return (persons
             .select("kb_id", "confidence",
-                    F.explode(_gen_subnames("name")).alias("subname"))
+                    F.explode(_gen_subnames(_p3(F.col("name"))))
+                    .alias("subname"))
             .groupBy("subname")
             .agg(F.array_distinct(F.transform(
                 F.array_sort(F.collect_list(

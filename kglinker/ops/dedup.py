@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from kglinker.ops.util import fround
 
 __all__ = ["exact_dedup_groups", "minhash_signatures", "minhash_lsh_pairs",
-           "minhash_band_exprs", "minhash_est_expr",
+           "minhash_band_exprs", "minhash_est",
            "simhash_signatures", "simhash_pairs", "ngram_jaccard_pairs",
            "repeated_ngram_spans", "duplication_fraction"]
 
@@ -51,13 +51,14 @@ def minhash_band_exprs(num_hashes: int, bands: int) -> list[F.Column]:
     return out
 
 
-def minhash_est_expr(num_hashes: int, prefix_a: str = "a_",
-                     prefix_b: str = "b_") -> F.Column:
-    """est_sim = fraction of equal minhashes between two prefixed
-    signature column sets — shared batch/streaming definition."""
-    return sum(F.when(F.col(f"{prefix_a}h{i}") == F.col(f"{prefix_b}h{i}"),
-                      1).otherwise(0)
-               for i in range(num_hashes)) / F.lit(float(num_hashes))
+def minhash_est(sa: F.Column, sb: F.Column) -> F.Column:
+    """est_sim = fraction of equal minhashes between two signature arrays
+    (``array(h0..h{n-1})``) — shared batch/streaming definition. A NULL
+    hash never counts as equal. One ``zip_with`` expression whatever the
+    signature width, so codegen does not grow with ``num_hashes``."""
+    equal = F.size(F.filter(F.zip_with(sa, sb, lambda x, y: x == y),
+                            lambda eq: eq))
+    return equal / F.size(sa)
 
 
 def _tokens(col: str = "text") -> F.Column:
@@ -140,20 +141,13 @@ def minhash_lsh_pairs(docs: DataFrame, num_hashes: int = 8,
         # extra pass, never enabled on the registered/bench path)
         cand = cand.localCheckpoint(eager=True)
         stats["n_candidates"] = cand.count()
-    # est over the signature packed as ONE array column (r7): equal-count
-    # via zip_with equality is value-identical to minhash_est_expr's
-    # 2×num_hashes-column comparison chain (tests/test_r07_optim_parity.py
-    # asserts the two forms agree), but the codegen is O(1) expressions
-    # instead of O(num_hashes) renamed columns through two joins —
-    # measured 2× faster end-to-end at sf0.1, and the production-64-hash
-    # compile no longer scales with num_hashes. (Streaming admission
-    # keeps minhash_est_expr — prefixed columns are its state layout.)
+    # est over the signature packed as ONE array column (r7): the
+    # codegen is O(1) expressions instead of O(num_hashes) renamed
+    # columns through two joins — measured 2× faster end-to-end at sf0.1
     arr = F.array(*hcols)
     sa = sig.select(F.col("doc_id").alias("doc_a"), arr.alias("_sa"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), arr.alias("_sb"))
-    est = (F.size(F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y),
-                           lambda eq: eq))
-           / F.lit(float(num_hashes)))
+    est = minhash_est(F.col("_sa"), F.col("_sb"))
     out = (cand.join(sa, "doc_a").join(sb, "doc_b")
            .withColumn("est_sim", fround(est, 4))
            .filter(F.col("est_sim") >= min_est)

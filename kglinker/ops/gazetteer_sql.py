@@ -13,6 +13,10 @@ second word equals any bigram's first word → bigram matches can never
 overlap each other, so leftmost-longest reduces to "all bigram matches +
 unigram matches not covered by a bigram" — pure joins/anti-joins, no
 recursion. (The automaton path has no such restriction.)
+
+Precondition: ``doc_id`` is unique in ``docs``. Nothing deduplicates by
+(doc_id, pos), so a repeated doc_id repeats its linked rows and counts
+its entity pairs once per copy in the co-occurrence weight.
 """
 
 from __future__ import annotations
@@ -20,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["GAZETTEER", "gazetteer_df", "doc_tokens", "doc_mentions",
-           "doc_linked", "doc_cooccurrence", "doc_components"]
+__all__ = ["GAZETTEER", "gazetteer_df", "doc_mentions", "doc_linked",
+           "doc_cooccurrence", "doc_components"]
 
 # (surface, kb_id, confidence); two-token surfaces obey the
 # non-chainable-bigram construction; 'query' is deliberately ambiguous
@@ -47,13 +51,6 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
     return spark.sql(
         f"SELECT surface, kb_id, confidence, size(split(surface, ' ')) AS n_words "
         f"FROM VALUES {values} AS t(surface, kb_id, confidence)")
-
-
-def doc_tokens(docs: DataFrame) -> DataFrame:
-    """M1 tokenizer, relational form: (doc_id, pos, tok) with 0-based
-    positions (documents are single-space separated)."""
-    return docs.select("doc_id", F.posexplode(F.split("text", " "))
-                       .alias("pos", "tok"))
 
 
 def _emit_expr():
@@ -137,7 +134,8 @@ def doc_linked(docs: DataFrame) -> DataFrame:
     all: the emitted hits are already distinct per (doc_id, pos), so the
     pre-r7 ``doc_mentions().distinct()`` round trip (one corpus-wide
     exchange + a second broadcast join) collapses into a pure projection
-    over the scan. Same rows, zero exchanges."""
+    over the scan. Same rows, zero exchanges. Assumes a unique
+    ``doc_id`` (module docstring)."""
     best = _static_best()
     best_map = F.create_map(*[x for s in sorted(best)
                               for x in (F.lit(s),
@@ -157,7 +155,9 @@ def doc_cooccurrence(docs: DataFrame) -> DataFrame:
     exchange in the whole plan is the final (subj, obj) count aggregation
     (map-side combinable). The pre-r7 plan paid three corpus-wide
     exchanges here (linked distinct + groupBy(doc_id) + the count); the
-    DuckDB gate is byte-identical (min/distinct/sort all order-free)."""
+    DuckDB gate is byte-identical (min/distinct/sort all order-free).
+    Assumes a unique ``doc_id`` (module docstring): a duplicated document
+    adds its pairs to the weight again."""
     best = _static_best()
     best_map = F.create_map(*[x for s in sorted(best)
                               for x in (F.lit(s),

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["salted_count", "salted_agg_sum", "repartition_by_conv", "fan_out"]
+__all__ = ["salted_count", "fan_out"]
 
 
 # Analyzed-plan nodes under which probing df.rdd is provably harmless:
@@ -72,13 +72,6 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df.repartition(target)
 
 
-def repartition_by_conv(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Explicit conversation partitioning ahead of per-conv operators."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism * 2
-    return df.repartition(n, "conv_id")
-
-
 def _with_salt(df: DataFrame, salt_buckets: int) -> DataFrame:
     # salt from a monotonically varying source independent of the group key:
     # hash of the whole row spreads a hot key's rows uniformly
@@ -94,13 +87,3 @@ def salted_count(df: DataFrame, keys: list[str], salt_buckets: int = 16,
               .agg(F.count(F.lit(1)).alias("_partial")))
     return (stage1.groupBy(*keys)
             .agg(F.sum("_partial").alias(weight_col)))
-
-
-def salted_agg_sum(df: DataFrame, keys: list[str], value_col: str,
-                   salt_buckets: int = 16, out_col: str = "total") -> DataFrame:
-    """sum(value) per key, salted two-stage."""
-    stage1 = (_with_salt(df, salt_buckets)
-              .groupBy(*keys, "_salt")
-              .agg(F.sum(value_col).alias("_partial")))
-    return (stage1.groupBy(*keys)
-            .agg(F.sum("_partial").alias(out_col)))

@@ -159,11 +159,16 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
                 .select("doc_id", F.col("bk.band").alias("band"),
                         F.col("bk.key").alias("key"), *hcols))
 
+    def _sig_array(side: str, name: str):
+        # the state keeps one h<i> column per hash; the estimate reads
+        # them packed as one array
+        return F.array(*[F.col(f"{side}.{h}") for h in hcols]).alias(name)
+
     def sink(batch_df, batch_id: int) -> None:
         if int(batch_id) in _applied(state_path, "sigs"):
             return
         sp = batch_df.sparkSession
-        from kglinker.ops.dedup import minhash_est_expr, minhash_signatures
+        from kglinker.ops.dedup import minhash_est, minhash_signatures
         sig = minhash_signatures(batch_df, num_hashes)
         bk = _band_keys(sig)
         # docs too short to shingle (< 3 tokens) produce NO signature;
@@ -176,7 +181,7 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
                           *[F.lit(None).cast("string").alias(h)
                             for h in hcols]))
         bk = bk.unionByName(shorts).cache()
-        est = minhash_est_expr(num_hashes, "a", "b")
+        est = minhash_est(F.col("sa"), F.col("sb"))
 
         # a collision kills when est reaches min_est (signature rows) or
         # exactly (the band −1 short-doc channel: same md5 key)
@@ -195,8 +200,7 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
                 (F.col("n.band") == F.col("s.band"))
                 & (F.col("n.key") == F.col("s.key"))).select(
                 F.col("n.doc_id").alias("doc_id"), F.col("n.band").alias("band"),
-                *[F.col(f"n.h{i}").alias(f"ah{i}") for i in range(num_hashes)],
-                *[F.col(f"s.h{i}").alias(f"bh{i}") for i in range(num_hashes)])
+                _sig_array("n", "sa"), _sig_array("s", "sb"))
             dead = _dead(coll)
         # within-batch: doc_a < doc_b collision -> the larger id dies
         a, b = bk.alias("a"), bk.alias("b")
@@ -205,10 +209,7 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
                              & (F.col("a.doc_id") < F.col("b.doc_id")))
                       .select(F.col("b.doc_id").alias("doc_id"),
                               F.col("a.band").alias("band"),
-                              *[F.col(f"a.h{i}").alias(f"ah{i}")
-                                for i in range(num_hashes)],
-                              *[F.col(f"b.h{i}").alias(f"bh{i}")
-                                for i in range(num_hashes)]))
+                              _sig_array("a", "sa"), _sig_array("b", "sb")))
         intra = _dead(intra_coll)
         dead = intra if dead is None else dead.unionByName(intra).distinct()
         survivors = bk.join(dead, "doc_id", "left_anti") \

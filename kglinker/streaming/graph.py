@@ -27,7 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kglinker.data.transcripts import TRANSCRIPTS_SCHEMA
 from kglinker.extract.stage import extract_mentions
-from kglinker.graph.triples import mention_entities
+from kglinker.graph.triples import conversation_pairs, mention_entities
 
 __all__ = ["merge_edge_deltas", "stream_cooccurrence_edges", "read_edge_state"]
 
@@ -138,16 +138,7 @@ def stream_cooccurrence_edges(spark: SparkSession, input_path: str,
         if int(batch_id) in _applied(state_path):
             return   # replayed batch: already merged (idempotence guard)
         mentions = extract_mentions(batch_df, artifacts_bcast)
-        ents = mention_entities(mentions)
-        per_conv = (ents.groupBy("conv_id")
-                    .agg(F.sort_array(F.collect_set("kb_id")).alias("es")))
-        es = F.col("es")
-        pairs = (per_conv.select(F.explode(F.flatten(F.transform(
-                    es, lambda x, i: F.transform(
-                        F.slice(es, i + 2, F.size(es)),
-                        lambda y: F.struct(x.cast("string").alias("subj"),
-                                           y.cast("string").alias("obj")))))).alias("p"))
-                 .select("p.subj", "p.obj"))
+        pairs = conversation_pairs(mention_entities(mentions))
         delta = pairs.groupBy("subj", "obj").agg(
             F.count(F.lit(1)).alias("weight"))
         merge_edge_deltas(batch_df.sparkSession, delta, state_path)

@@ -1,5 +1,5 @@
 """Distributed-vs-single-process parity (SURVEY §5 pipeline-parity tests):
-the Spark ``applyInPandas`` extraction over the synthetic transcripts must
+the Spark ``mapInArrow`` extraction over the synthetic transcripts must
 equal the single-process oracle row-for-row, and the per-turn text equality
 invariant must hold after reassembly."""
 
@@ -61,7 +61,7 @@ def test_mention_surfaces_are_text_substrings(spark, artifacts):
 def test_single_conversation_spanning_many_arrow_batches(spark, artifacts,
                                                          artifacts_bcast):
     """One 25k-turn conversation exceeds maxRecordsPerBatch (10k) → the
-    mapInPandas carry-over must reassemble it before annotation (state
+    mapInArrow carry-over must reassemble it before annotation (state
     would otherwise reset mid-conversation)."""
     from pyspark.sql import functions as F
     from kglinker.extract.stage import annotate_pdf, extract_mentions

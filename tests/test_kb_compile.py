@@ -1,6 +1,6 @@
 """KB-snapshot compile: the plan shape of the namelist build and the
 canonical map, and their parity with the plain-Python oracles on a KB
-larger than the 29-row fixture."""
+larger than the 29-row fixture and on names that need P3 normalization."""
 
 from __future__ import annotations
 
@@ -9,10 +9,10 @@ import pytest
 from kglinker.data.kb_fixture import KB_COLUMNS, KB_ROWS, KB_SCHEMA
 from kglinker.graph.canonicalize import canonical_map
 from kglinker.jobs.kb_scale_probe import _rows as synthetic_kb_rows
-from kglinker.kb.names import build_namelist
+from kglinker.kb.names import build_namelist, build_subname_map
 from kglinker.kb.scoring import score_kb
 from kglinker.oracle import oracle_canonical_map
-from kglinker.oracle_kb import oracle_namelist
+from kglinker.oracle_kb import oracle_namelist, oracle_subnames
 
 N_SYNTHETIC = 300
 ID_OFFSET = 1_000_000
@@ -73,3 +73,33 @@ def test_canonical_map_matches_oracle_beyond_fixture(larger_kb):
     rows, scored = larger_kb
     got = {r["kb_id"]: r["canon_id"] for r in canonical_map(scored).collect()}
     assert got == oracle_canonical_map(rows)
+
+
+def test_padded_names_match_oracle(spark):
+    """Stray whitespace and a zero-width character in a person NAME: the
+    engine compiles the P3-normalized name, like the oracle — no
+    fragment for the whole name, a bare-surname entry from the last
+    real word, no zero-width surface."""
+    washington = KB_ROWS[1]
+    padded = [(2_000_000 + i, "person", name, "", "", "") + washington[6:]
+              for i, name in enumerate([" Madonna ", "Karel Zeman ",
+                                        "Bjork\u200b"])]
+    rows = list(KB_ROWS) + padded
+    scored = score_kb(spark.createDataFrame(rows, KB_SCHEMA)).cache()
+    dicts = [dict(zip(KB_COLUMNS, r)) for r in rows]
+    try:
+        got = {r["surface"]: (list(r["kb_ids"]), bool(r["is_fragment"]))
+               for r in build_namelist(scored).collect()}
+        got_sub = {r["subname"]: list(r["kb_ids"])
+                   for r in build_subname_map(scored).collect()}
+    finally:
+        scored.unpersist()
+    want = {r["surface"]: (r["kb_ids"], r["is_fragment"])
+            for r in oracle_namelist(dicts)}
+    want_sub = {r["subname"]: r["kb_ids"] for r in oracle_subnames(dicts)}
+    diff = sorted(s for s in got.keys() | want.keys()
+                  if got.get(s) != want.get(s))
+    assert not diff, [(s, got.get(s), want.get(s)) for s in diff]
+    assert got_sub == want_sub
+    assert want["Madonna"] == ([2_000_000], False)
+    assert want["Zeman"][0] == [2_000_001]

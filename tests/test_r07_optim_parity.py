@@ -2,10 +2,9 @@
 must produce byte-identical results to the pre-r7 formulation it
 replaced (the round's contract is plans change, values never do).
 
-- minhash est: array zip_with equal-count ≡ minhash_est_expr's prefixed
-  column-comparison chain (the streaming admission path still uses the
-  latter — this is the shared-definition guard the r7 rewrite would
-  otherwise have lost).
+- minhash est: the one ``minhash_est`` expression (batch pairs and
+  streaming admission) ≡ a plain-Python equal-count over the collected
+  signature pairs, NULL hashes counting as unequal.
 - duplication_fraction: NULL-text docs are excluded (no n_tokens=-1 /
   dup_frac=-0.0 leak through a curate max_dup_frac filter).
 - doc_linked / doc_cooccurrence: the in-row static-best formulation ≡
@@ -31,25 +30,35 @@ def _docs(spark):
                                        "lang string, source string")
 
 
-def test_minhash_est_array_matches_column_form(spark):
-    from kglinker.ops.dedup import minhash_est_expr, minhash_signatures
+def test_minhash_est_matches_python_equal_count(spark):
+    from kglinker.ops.dedup import minhash_est, minhash_signatures
     n = 16
-    sig = minhash_signatures(_docs(spark), n)
     hcols = [f"h{i}" for i in range(n)]
-    a = sig.select(F.col("doc_id").alias("doc_a"),
-                   *[F.col(h).alias(f"a_{h}") for h in hcols],
-                   F.array(*hcols).alias("_sa"))
-    b = sig.select(F.col("doc_id").alias("doc_b"),
-                   *[F.col(h).alias(f"b_{h}") for h in hcols],
-                   F.array(*hcols).alias("_sb"))
-    both = a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
-    col_est = minhash_est_expr(n)
-    arr_est = (F.size(F.filter(F.zip_with("_sa", "_sb",
-                                          lambda x, y: x == y),
-                               lambda eq: eq)) / F.lit(float(n)))
-    mism = both.filter(col_est != arr_est).count()
-    assert mism == 0
-    assert both.count() > 0
+    sig = minhash_signatures(_docs(spark), n)
+    # every hash NULL (a short doc in streaming admission), and doc 0
+    # with its first half of hashes NULL
+    null = F.lit(None).cast("string")
+    sig = sig.unionByName(
+        sig.filter("doc_id = 0").select(
+            F.lit(90).cast("long").alias("doc_id"),
+            *[null.alias(h) for h in hcols])).unionByName(
+        sig.filter("doc_id = 0").select(
+            F.lit(91).cast("long").alias("doc_id"),
+            *[null.alias(h) for h in hcols[:n // 2]], *hcols[n // 2:]))
+    a = sig.select(F.col("doc_id").alias("doc_a"), F.array(*hcols).alias("sa"))
+    b = sig.select(F.col("doc_id").alias("doc_b"), F.array(*hcols).alias("sb"))
+    rows = (a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b", "sa", "sb",
+                    minhash_est(F.col("sa"), F.col("sb")).alias("est"))
+            .collect())
+    assert len(rows) == 28
+    for r in rows:
+        equal = sum(x is not None and x == y for x, y in zip(r["sa"], r["sb"]))
+        assert r["est"] == equal / n, (r["doc_a"], r["doc_b"])
+    ests = {(r["doc_a"], r["doc_b"]): r["est"] for r in rows}
+    assert ests[(0, 4)] == 1.0                # identical texts
+    assert ests[(0, 91)] == 0.5               # NULL vs hash is unequal
+    assert ests[(90, 91)] == 0.0              # NULL vs NULL is unequal
 
 
 def test_duplication_fraction_drops_null_text(spark):

@@ -1,7 +1,7 @@
 """Streamed >30M-surface automaton build path (r2 verdict demand #5):
 ``broadcast_artifacts(streamed=True)`` feeds ``toLocalIterator`` rows
-straight into the trie so the driver never holds a row list next to the
-compiled structures — previously BENCH/BASELINE.md prose, now code.
+straight into the automaton's surface dict so the driver never holds a
+row list next to the compiled structures — previously BENCH/BASELINE.md prose, now code.
 
 1. Parity: streamed and collect builds produce identical artifacts on the
    fixture KB (same matches, meta, subnames).

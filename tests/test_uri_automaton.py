@@ -68,7 +68,7 @@ def test_uri_hit_wins_over_covered_name_match(uri_artifacts):
 
 
 def test_flags_plumb_through_distributed_stage(spark, kb_scored):
-    """The figa opt-in flags ride through the mapInPandas stage, not just
+    """The figa opt-in flags ride through the mapInArrow stage, not just
     the single-conversation core."""
     from kglinker.extract.stage import extract_mentions
     from kglinker.kb.names import (build_namelist, build_subname_map,
@@ -93,9 +93,9 @@ def test_flags_plumb_through_distributed_stage(spark, kb_scored):
 
 
 def test_uri_probe_fallback_at_scale(spark):
-    """Hundreds of URIs share the first token ("https") → the scan must
-    take the trie longest-match path (probe lists are capped at 64), and
-    prefix URIs must not shadow longer ones."""
+    """Hundreds of URIs share the first token ("https") → the scan tries
+    that token's distinct surface lengths longest first, so a prefix URI
+    must not shadow a longer one."""
     from kglinker.automaton.build import Automaton
     entries = {f"https://w.example/E{i:04d}": ((i,), False)
                for i in range(300)}
