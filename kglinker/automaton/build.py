@@ -96,11 +96,6 @@ class Automaton:
         spell index derive from it without re-materializing rows)."""
         return self._entries
 
-    # -- M1: token starts (offsets in unicode chars, figa_cedar.tpp:941-1013)
-    @staticmethod
-    def token_starts(text: str) -> list[int]:
-        return [m.start() for m in _TOKEN_RUN.finditer(text)]
-
     def autocomplete(self, prefix: str, limit: int = 10) -> list[tuple[str, tuple]]:
         """M5 (figa ``-a``, figa/README:5): dictionary surfaces extending
         ``prefix``, in code-point order, with their (kb_ids, is_fragment)

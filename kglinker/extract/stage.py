@@ -53,10 +53,7 @@ def _pa_schema():
         ("kb_id", pa.int64()), ("resolved", pa.string())])
 
 
-try:
-    _PA_SCHEMA = _pa_schema()
-except ImportError:  # pragma: no cover - pyarrow is a pyspark dependency
-    _PA_SCHEMA = None
+_PA_SCHEMA = _pa_schema()
 
 
 def _empty_out() -> pd.DataFrame:

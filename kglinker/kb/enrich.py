@@ -1,4 +1,4 @@
-"""KB enrichment & validation (SURVEY §2.1 S7/S8, §5.4).
+"""KB enrichment & validation (SURVEY §2.1 S8, §5.4).
 
 - :func:`join_wiki_stats` — S8: left join raw wiki stats onto the KB by
   wiki URL (``/root/reference/wiki_stats_to_KB.py:23-48``); broadcast the
@@ -6,8 +6,6 @@
 - :func:`check_kb_arity` — the reference's KB lint
   (``check_columns_in_kb.py:42-53``): every row must carry the full column
   set with non-null type/name; returns the offending rows (empty = valid).
-- :func:`write_kb_scored` — S7 sink: the scored KB rewritten next to its
-  snapshot (``metrics_to_KB.py:36-39``).
 """
 
 from __future__ import annotations
@@ -15,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["join_wiki_stats", "check_kb_arity", "write_kb_scored"]
+__all__ = ["join_wiki_stats", "check_kb_arity"]
 
 REQUIRED_COLS = ["kb_id", "type", "name"]
 
@@ -44,7 +42,3 @@ def check_kb_arity(kb: DataFrame) -> DataFrame:
         cond = cond | F.col(c).isNull()
     cond = cond | (F.col("kb_id") <= 0) | (F.col("name") == "") | (F.col("type") == "")
     return kb.filter(cond)
-
-
-def write_kb_scored(kb_scored: DataFrame, path: str) -> None:
-    kb_scored.write.mode("overwrite").parquet(path)

@@ -2,11 +2,10 @@
 §2.3 G1–G11, §2.4 A1–A2.
 
 Spark re-expression of ``create_cedar.sh`` → ``KB2namelist.py`` →
-``uniq_namelist.py``: the alias/redirect explode and tag-stripping are
-Column expressions (P1/P3/P4 → ``array_union``/``regexp_replace``,
-Catalyst prunes + pushes them down); the irregular generators (G1–G9) and
-the P2 filter run in one ``mapInArrow`` pass over the (small) KB; the
-G10 surnames stay Column expressions; the A1 group-merge and A2
+``uniq_namelist.py``: one ``mapInArrow`` pass over the (small) KB does
+the per-row string work — P1/P3/P4 base surfaces, the G1–G10 generators
+and the P2 filter — with the :mod:`kglinker.kb.expand` kernels, the one
+definition of a surface's normal form; the A1 group-merge and A2
 confidence ordering are a single ``groupBy(surface)`` with a
 ``sort_array(struct(-confidence, kb_id))`` — exactly the reference's
 "order candidate ids by KB CONFIDENCE desc, fragment sentinel last"
@@ -51,33 +50,19 @@ def _stop_variants() -> set[str]:
 
 @F.pandas_udf(_VARIANT_SCHEMA)
 def _gen_subnames(name: pd.Series) -> pd.Series:
-    """G9 fragment extraction, Arrow-batched."""
-    return pd.Series([X.subnames(n) for n in name])
+    """G9 fragment extraction of the P3-normalized NAME, Arrow-batched."""
+    return pd.Series([X.subnames(X.normalize_ws(n)) for n in name])
 
 
-def _p3(s: F.Column) -> F.Column:
-    """P3 (KB2namelist.py:207,408-410): drop zero-width characters,
-    collapse whitespace runs to one space, trim. Column expressions on
-    purpose: Java ``\\s`` and Spark ``trim`` are the namelist's
-    definition of whitespace, not Python's."""
-    return F.trim(F.regexp_replace(
-        F.regexp_replace(s, "[\u200b\u200c\u200d\ufeff]", ""), r"\s+", " "))
-
-
-def _bases() -> F.Column:
-    """P1: NAME + ALIASES + REDIRECTS as one array of surface forms, with
-    ``#lang=``/``#ntype=`` tags stripped (KB2namelist.py:146-165),
-    whitespace normalized (P3) and empty forms dropped."""
-    surfaces = F.array_union(
-        F.array(F.col("name")),
-        F.array_union(
-            F.split(F.coalesce(F.col("aliases"), F.lit("")), r"\|"),
-            F.split(F.coalesce(F.col("redirects"), F.lit("")), r"\|"),
-        ),
-    )
-    clean = F.transform(surfaces, lambda s: _p3(
-        F.regexp_replace(s, r"#(?:lang|ntype)=[^#|]*", "")))
-    return F.filter(clean, lambda s: s != "")
+def _ranked_ids() -> F.Column:
+    """A2 aggregate: the group's distinct non-null ``kb_id``s ordered by
+    confidence desc, ties by kb_id asc (uniq_namelist.py:52-104)."""
+    return F.array_distinct(F.transform(
+        F.array_sort(F.collect_list(
+            F.when(F.col("kb_id").isNotNull(),
+                   F.struct((-F.coalesce("confidence", F.lit(0.0))).alias("negconf"),
+                            F.col("kb_id").alias("id"))))),
+        lambda s: s["id"]))
 
 
 def _variants(name: str, base: str, country: str, source_loc: str,
@@ -115,19 +100,24 @@ def _inflections(surface: str, base: str, gender: str,
     return acc
 
 
-_ROW_COLS = ("kb_id", "type", "gender", "_inflect", "name", "country",
-             "source_loc", "description", "_bases")
+_ROW_COLS = ("kb_id", "type", "gender", "confidence", "name", "aliases",
+             "redirects", "country", "source_loc", "description")
 _SURFACE_DDL = "surface string, kb_id long, type string, is_fragment boolean"
 
 
-def _surface_batches(batches, vocative: bool):
-    """Scored KB rows → ``(surface, kb_id, type, is_fragment)``: base
-    surfaces + G1–G7 variants + G8 inflections minus P2-unsuitable forms
-    (KB2namelist.py:210-250), then the G9 subname fragments of person
-    rows (sentinel N, uniq_namelist.py:101-104). One Python pass per
-    batch; kb_id stays null on fragments — fragment→candidate mapping
-    lives in the separate subname map (D7), like the reference's
-    namedict."""
+def _surface_batches(batches, inflection_floor: float | None,
+                     vocative: bool):
+    """Scored KB rows → ``(surface, kb_id, type, is_fragment)``: the
+    P1/P4 base surfaces (NAME + ALIASES + REDIRECTS, tags and word flags
+    stripped, KB2namelist.py:146-165,407) + G1–G7 variants of the
+    P3-normalized NAME + G8 inflections of every base surface (rows at or
+    above ``inflection_floor``) minus P2-unsuitable forms
+    (KB2namelist.py:210-250); for person rows also the G9 subname
+    fragments (sentinel N, uniq_namelist.py:101-104) and the G10 bare
+    surname as a direct entry at confidence ≥ 20, ≥ 15 for fictional
+    persons (KB2namelist.py:452-474). One Python pass per batch; kb_id
+    stays null on fragments — fragment→candidate mapping lives in the
+    separate subname map (D7), like the reference's namedict."""
     import pyarrow as pa
     schema = pa.schema([("surface", pa.string()), ("kb_id", pa.int64()),
                         ("type", pa.string()), ("is_fragment", pa.bool_())])
@@ -135,18 +125,28 @@ def _surface_batches(batches, vocative: bool):
     for rb in batches:
         out: list[tuple] = []
         cols = [rb.column(c).to_pylist() for c in _ROW_COLS]
-        for kb_id, t, g, infl, name, c, sl, d, bases in zip(*cols):
+        for kb_id, t, g, conf, raw, al, rd, c, sl, d in zip(*cols):
             etype = t or ""
             base = etype.split(":")[0]
+            name = X.normalize_ws(raw or "")
+            bases = {b for b in map(X.strip_name_tags, [raw or ""]
+                                    + (al or "").split("|")
+                                    + (rd or "").split("|")) if b}
             forms = set(bases)
             forms.update(_variants(name, base, c or "", sl or "", d or ""))
-            if infl:
+            if inflection_floor is None or (conf is not None
+                                            and conf >= inflection_floor):
                 for s in bases:
                     forms |= _inflections(s, base, g or "", vocative)
             out += [(s, kb_id, t, False) for s in forms
                     if not X.is_unsuitable(s, etype, allow)]
             if etype.startswith("person"):
                 out += [(s, None, "person", True) for s in X.subnames(name)]
+                surname = name.split(" ")[-1]
+                thresh = 15.0 if etype == "person:fictional" else 20.0
+                if (len(surname) >= 2 and surname[0] == surname[0].upper()
+                        and conf is not None and conf >= thresh):
+                    out.append((surname, kb_id, t, False))
         cols = list(zip(*out)) if out else [[]] * len(schema)
         yield pa.RecordBatch.from_arrays(
             [pa.array(v, type=f.type) for v, f in zip(cols, schema)],
@@ -154,15 +154,15 @@ def _surface_batches(batches, vocative: bool):
 
 
 def build_namelist(kb_scored: DataFrame,
-                   word_freq: DataFrame | None = None,
                    inflection_min_confidence: float | None = None,
                    vocative: bool = False) -> DataFrame:
     """KB (with ``confidence``) → namelist
     ``(surface, kb_ids: array<long> conf-desc-ordered, is_fragment: bool)``.
 
-    ``word_freq`` (optional ``(word, freq)``) gates G10 bare-surname direct
-    entries by capital dominance (KB2namelist.py:452-474); when absent every
-    capitalized surname is treated as dominant.
+    Every per-row surface (P1–P4, G1–G10, the P2 filter) comes out of
+    one ``mapInArrow`` pass (:func:`_surface_batches`); the G11 pronouns,
+    P7 nationality forms, P6 stoplist demotion and the A1/A2 merge are
+    Spark.
 
     ``inflection_min_confidence``: optional floor — rows below it skip G8
     declension generation (their nominative surfaces still enter). The
@@ -174,44 +174,16 @@ def build_namelist(kb_scored: DataFrame,
     the vocative case ("Jane Nováku"), matching the reference namegen's
     grammar output; the default keeps the surface set byte-stable.
     """
-    # G1–G10 read the P3-normalized NAME: a padded or zero-width name
-    # must not leave a stray whole-name fragment or an empty surname
-    kb = kb_scored.withColumn("name", _p3(F.col("name")))
-    # G1–G9 in one Python boundary per KB partition: separate scalar
-    # UDFs would each plan as an ArrowEvalPython node, and a UDF filter
-    # over a union is pushed into every branch
-    inflect = (F.lit(True) if inflection_min_confidence is None
-               else F.coalesce(F.col("confidence")
-                               >= float(inflection_min_confidence),
-                               F.lit(False)))
-    generated = (kb
-                 .withColumn("_inflect", inflect)
-                 .withColumn("_bases", _bases())
+    # one Python boundary per KB partition: separate scalar UDFs would
+    # each plan as an ArrowEvalPython node, and a UDF filter over a union
+    # is pushed into every branch
+    floor = (None if inflection_min_confidence is None
+             else float(inflection_min_confidence))
+    generated = (kb_scored
                  .select(*_ROW_COLS)
-                 .mapInArrow(lambda it: _surface_batches(it, bool(vocative)),
+                 .mapInArrow(lambda it: _surface_batches(it, floor,
+                                                         bool(vocative)),
                              _SURFACE_DDL))
-
-    # G10: bare surname as a *direct* entry when confidence ≥ 20 (person) /
-    # ≥ 15 (fictional) and capital-dominant (KB2namelist.py:452-474).
-    persons = kb.filter(F.col("type").startswith("person"))
-    thresh = F.when(F.col("type") == "person:fictional", F.lit(15.0)).otherwise(F.lit(20.0))
-    surname = (persons
-               .withColumn("surface", F.element_at(F.split("name", " "), -1))
-               .filter((F.length("surface") >= 2)
-                       & (F.substring("surface", 1, 1) == F.initcap(F.substring("surface", 1, 1)))
-                       & (F.col("confidence") >= thresh))
-               .select("kb_id", "type", "surface")
-               .withColumn("is_fragment", F.lit(False)))
-    if word_freq is not None:
-        # capital dominance: freq(Capitalized) / Σ case-insensitive > 0.5
-        tot = word_freq.groupBy(F.lower("word").alias("lw")).agg(F.sum("freq").alias("tot"))
-        cap = (word_freq.join(tot, F.lower("word") == F.col("lw"))
-               .filter(F.col("freq") / F.col("tot") > 0.5)
-               .select(F.col("word").alias("surface")))
-        # no broadcast hint (r4 verdict #3): cap is corpus-vocabulary-
-        # sized — size-based join selection + AQE pick the strategy, so
-        # a web-scale vocabulary can't pin executor memory
-        surname = surname.join(cap, "surface", "left_semi")
 
     # G11 pronouns + P7 nationality forms → fragment, senseless rows
     spark = kb_scored.sparkSession
@@ -220,10 +192,7 @@ def build_namelist(kb_scored: DataFrame,
          sorted({w for p in PRONOUNS for w in (p, p[:1].upper() + p[1:])})]
         + [(n, None, "nationality", True) for n in sorted(nationality_forms())],
         _SURFACE_DDL)
-
-    all_rows = (generated
-                .unionByName(surname.select("surface", "kb_id", "type", "is_fragment"))
-                .unionByName(extra))
+    all_rows = generated.unionByName(extra)
 
     # P6 stoplist: demote to fragment-only (uniq_namelist.py:33-39)
     stop = sorted(_stop_variants())
@@ -237,19 +206,12 @@ def build_namelist(kb_scored: DataFrame,
     # #3): at 10^7–10^8-row KBs a forced broadcast is a driver/executor
     # memory failure point; size-based selection + AQE choose.
     conf = kb_scored.select("kb_id", "confidence")
-    merged = (all_rows
-              .join(conf, "kb_id", "left")
-              .groupBy("surface")
-              .agg(
-                  F.array_distinct(F.transform(
-                      F.array_sort(F.collect_list(
-                          F.when(F.col("kb_id").isNotNull(),
-                                 F.struct((-F.coalesce("confidence", F.lit(0.0))).alias("negconf"),
-                                          F.col("kb_id").alias("id"))))),
-                      lambda s: s["id"])).alias("kb_ids"),
-                  F.max(F.col("is_fragment").cast("int")).cast("boolean").alias("is_fragment"),
-              ))
-    return merged
+    return (all_rows
+            .join(conf, "kb_id", "left")
+            .groupBy("surface")
+            .agg(_ranked_ids().alias("kb_ids"),
+                 F.max(F.col("is_fragment").cast("int")).cast("boolean")
+                 .alias("is_fragment")))
 
 
 def build_uri_namelist(kb_scored: DataFrame) -> DataFrame:
@@ -266,12 +228,8 @@ def build_uri_namelist(kb_scored: DataFrame) -> DataFrame:
             .filter(F.coalesce(F.col("surface"), F.lit("")) != ""))
     return (uris
             .groupBy("surface")
-            .agg(F.array_distinct(F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct((-F.coalesce("confidence", F.lit(0.0))).alias("negconf"),
-                             F.col("kb_id").alias("id")))),
-                lambda s: s["id"])).alias("kb_ids"),
-                F.lit(False).alias("is_fragment")))
+            .agg(_ranked_ids().alias("kb_ids"),
+                 F.lit(False).alias("is_fragment")))
 
 
 def build_subname_map(kb_scored: DataFrame) -> DataFrame:
@@ -281,11 +239,6 @@ def build_subname_map(kb_scored: DataFrame) -> DataFrame:
     persons = kb_scored.filter(F.col("type").startswith("person"))
     return (persons
             .select("kb_id", "confidence",
-                    F.explode(_gen_subnames(_p3(F.col("name"))))
-                    .alias("subname"))
+                    F.explode(_gen_subnames(F.col("name"))).alias("subname"))
             .groupBy("subname")
-            .agg(F.array_distinct(F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct((-F.col("confidence")).alias("negconf"),
-                             F.col("kb_id").alias("id")))),
-                lambda s: s["id"])).alias("kb_ids")))
+            .agg(_ranked_ids().alias("kb_ids")))

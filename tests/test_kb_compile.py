@@ -1,10 +1,12 @@
 """KB-snapshot compile: the plan shape of the namelist build and the
 canonical map, and their parity with the plain-Python oracles on a KB
-larger than the 29-row fixture and on names that need P3 normalization."""
+larger than the 29-row fixture and on names that need P3/P4
+normalization, and the G10 bare-surname thresholds."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from kglinker.data.kb_fixture import KB_COLUMNS, KB_ROWS, KB_SCHEMA
 from kglinker.graph.canonicalize import canonical_map
@@ -26,7 +28,7 @@ def _final_plan(df) -> str:
 
 
 def test_namelist_one_python_map_node(kb_scored):
-    """G1–G9 and the P2 filter cross the Python boundary once: one
+    """P1–P4, G1–G10 and the P2 filter cross the Python boundary once: one
     MapInArrow node, no per-generator ArrowEvalPython nodes."""
     nl = build_namelist(kb_scored)
     nl.collect()
@@ -76,14 +78,18 @@ def test_canonical_map_matches_oracle_beyond_fixture(larger_kb):
 
 
 def test_padded_names_match_oracle(spark):
-    """Stray whitespace and a zero-width character in a person NAME: the
-    engine compiles the P3-normalized name, like the oracle — no
-    fragment for the whole name, a bare-surname entry from the last
-    real word, no zero-width surface."""
+    """Stray whitespace, a zero-width character or a no-break space in a
+    person NAME, and a P4 word-type flag on an alias: the engine compiles
+    the normalized, flag-free surfaces, like the oracle — no fragment for
+    the whole name, a bare-surname entry from the last real word, no
+    zero-width or flagged surface."""
     washington = KB_ROWS[1]
-    padded = [(2_000_000 + i, "person", name, "", "", "") + washington[6:]
-              for i, name in enumerate([" Madonna ", "Karel Zeman ",
-                                        "Bjork\u200b"])]
+    padded = [(2_000_000 + i, "person", name, "", aliases, "")
+              + washington[6:]
+              for i, (name, aliases) in enumerate([
+                  (" Madonna ", ""), ("Karel Zeman ", ""),
+                  ("Bjork\u200b", ""), ("Josef\u00a0Lada", ""),
+                  ("Jan Hus", "Mistr Jan#A")])]
     rows = list(KB_ROWS) + padded
     scored = score_kb(spark.createDataFrame(rows, KB_SCHEMA)).cache()
     dicts = [dict(zip(KB_COLUMNS, r)) for r in rows]
@@ -103,3 +109,25 @@ def test_padded_names_match_oracle(spark):
     assert got_sub == want_sub
     assert want["Madonna"] == ([2_000_000], False)
     assert want["Zeman"][0] == [2_000_001]
+    assert "Josef Lada" in want and "Josef\u00a0Lada" not in want
+    assert want["Mistr Jan"] == ([2_000_004], False)
+    assert "Mistr Jan#A" not in want
+
+
+def test_g10_surname_thresholds(spark):
+    """G10 bare-surname direct entries: confidence ≥ 15 for fictional
+    persons, ≥ 20 for the rest (KB2namelist.py:452-474). The surname is
+    also a G9 fragment, so only its kb_ids tell the direct entry apart."""
+    scored = spark.createDataFrame(
+        [(1, "person:fictional", "Rudolf Zvonek", 17.0),
+         (2, "person", "Karel Vrba", 17.0),
+         (3, "person", "Petr Hromada", 20.0)],
+        "kb_id long, type string, name string, confidence double"
+    ).select("*", *(F.lit(None).cast("string").alias(c) for c in
+                    ("aliases", "redirects", "description", "gender",
+                     "country", "source_loc")))
+    got = {r["surface"]: list(r["kb_ids"])
+           for r in build_namelist(scored).collect()}
+    assert got["Zvonek"] == [1]
+    assert got["Vrba"] == []
+    assert got["Hromada"] == [3]
