@@ -13,7 +13,8 @@ Match rules re-expressed relationally:
   ``score ≥ threshold`` match. Candidate argmax per left row via a window.
 - **CC merge** (north_star): the union of K2/K3 match edges is collapsed by
   alternating large-star / small-star rounds (Kiveris et al.) —
-  O(log n) DataFrame iterations whatever the graph's diameter. The
+  O(log n) DataFrame iterations whatever the graph's diameter, each one
+  eager checkpoint that also observes its own fixpoint signature. The
   canonical id is ``min(kb_id)`` per component — deterministic.
 
 Scale: all of this runs on the KB side (10^6–10^8 rows), never on the
@@ -23,12 +24,12 @@ Scale: all of this runs on the KB side (10^6–10^8 rows), never on the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 __all__ = ["unique_id_edges", "alias_match_edges",
-           "connected_components_star", "canonical_map"]
+           "connected_components_star", "canonical_id", "canonical_map"]
 
 
 def unique_id_edges(kb: DataFrame) -> DataFrame:
@@ -95,71 +96,53 @@ def alias_match_edges(kb: DataFrame, threshold: int = 2) -> DataFrame:
             .filter(F.col("_rn") == 1).drop("_rn", "score"))
 
 
-def connected_components_star(edges: DataFrame, max_iter: int = 25,
-                              num_partitions: int | None = None) -> DataFrame:
-    """(node, comp) via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    converges in O(log n) rounds regardless of graph DIAMETER (min-label
-    propagation needs O(diameter)). One algorithm for the KB alias graph,
-    document co-occurrence components and near-dup pair graphs, whose
-    similarity chains can be arbitrarily long; each round is two
-    groupBy(min) + join shuffles keyed by node.
+def _settle(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """Drop self-loops and duplicates, then materialize; the same job
+    observes the signature (count, order-independent hash sum)."""
+    obs = Observation()
+    e = (e.filter(F.col("a") != F.col("b"))
+         .distinct()
+         # decimal sum: long would overflow ANSI addExact on big edge sets
+         .observe(obs, F.count(F.lit(1)).alias("n"),
+                  F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"))
+         .localCheckpoint(eager=True))
+    return e, (obs.get["n"], obs.get["h"])
 
-    ``num_partitions`` defaults to 2× the cluster parallelism (input-
-    proportional); callers with tiny graphs pass a small value, since
-    per-round task count dominates there. Self-loops are dropped, so a
-    node whose only edge is to itself gets no label.
+
+def connected_components_star(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+    """(node, comp) via alternating large-star / small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
+    O(log n) rounds whatever the graph's DIAMETER (min-label propagation
+    needs O(diameter)). One algorithm for the KB alias graph, document
+    co-occurrence and near-dup pair graphs.
 
     - large-star: every node points its LARGER neighbors at the minimum
       of its closed neighborhood;
     - small-star: every node rewires its smaller neighbors (and itself)
-      to that minimum;
-    fixpoint when the oriented edge set stops changing (checked with a
-    count + order-independent hash aggregate — one cheap job per round)."""
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism * 2
+      to that minimum.
 
-    # orient (a > b); self-loops dropped
-    e = (edges.select(F.greatest("src", "dst").alias("a"),
-                      F.least("src", "dst").alias("b"))
-         .filter(F.col("a") != F.col("b"))
-         .distinct()
-         .repartition(num_partitions, "a")
-         .localCheckpoint(eager=True))
-
-    def signature(df: DataFrame) -> tuple:
-        # decimal sum: long would overflow ANSI addExact on big edge sets
-        r = df.agg(F.count(F.lit(1)).alias("n"),
-                   F.sum(F.xxhash64("a", "b").cast("decimal(38,0)"))
-                    .alias("h")).collect()[0]
-        return (r["n"], r["h"])
-
-    sig = signature(e)
+    Both minima are windows keyed by node, and each round ends in one
+    :func:`_settle`, whose job also yields the signature of the oriented
+    (a > b) edge set; the fixpoint is an unchanged signature. AQE sizes
+    the shuffles. A node whose only edges are self-loops gets no label."""
+    e, sig = _settle(edges.select(F.greatest("src", "dst").alias("a"),
+                                  F.least("src", "dst").alias("b")))
+    by_a = Window.partitionBy("a")
     for _ in range(max_iter):
         # large-star over the undirected view: for each u, larger
-        # neighbors v attach to m = min(Γ(u) ∪ {u})
-        und = e.select("a", "b").union(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        mins = (und.groupBy("a").agg(F.min("b").alias("mb"))
-                .select("a", F.least("mb", F.col("a")).alias("m")))
-        large = (und.join(mins, "a")
+        # neighbors v attach to m = min(Γ(u) ∪ {u}); v > u ≥ m, so the
+        # new edge (v, m) is already oriented
+        und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        large = (und.withColumn("m", F.least(F.min("b").over(by_a), F.col("a")))
                  .filter(F.col("b") > F.col("a"))
-                 .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                 .filter(F.col("a") != F.col("b"))
-                 .distinct())
+                 .select(F.col("b").alias("a"), F.col("m").alias("b")))
         # small-star on the (a > b) orientation: rewire smaller neighbors
-        # and the center itself to the minimum
-        mins2 = large.groupBy("a").agg(F.min("b").alias("m"))
-        j = large.join(mins2, "a")
-        e = (j.filter(F.col("b") != F.col("m"))
-             .select(F.col("b").alias("a"), F.col("m").alias("b"))
-             .union(mins2.select(F.col("a"), F.col("m").alias("b")))
-             .filter(F.col("a") != F.col("b"))
-             .distinct()
-             .repartition(num_partitions, "a")
-             .localCheckpoint(eager=True))
-        new_sig = signature(e)
+        # and the center itself to the minimum; the minimum's own
+        # (m, m) row is a self-loop that _settle drops
+        small = large.withColumn("m", F.min("b").over(by_a))
+        e, new_sig = _settle(small.select(F.inline(F.array(
+            F.struct(F.col("b").alias("a"), F.col("m").alias("b")),
+            F.struct(F.col("a").alias("a"), F.col("m").alias("b"))))))
         if new_sig == sig:
             break
         sig = new_sig
@@ -172,14 +155,24 @@ def connected_components_star(edges: DataFrame, max_iter: int = 25,
             .groupBy("node").agg(F.min("comp").alias("comp")))
 
 
+def canonical_id(df: DataFrame, canon: DataFrame | None, col: str) -> DataFrame:
+    """``df`` with ``col`` set to each row's canonical id: its ``canon_id``
+    in the broadcast ``canon`` map, else its own ``kb_id`` (every row when
+    ``canon`` is None)."""
+    if canon is None:
+        return df.withColumn(col, F.col("kb_id"))
+    return (df.join(F.broadcast(canon), "kb_id", "left")
+            .withColumn(col, F.coalesce("canon_id", "kb_id"))
+            .drop("canon_id"))
+
+
 def canonical_map(kb: DataFrame, threshold: int = 2) -> DataFrame:
     """(kb_id, canon_id) for every KB row that belongs to a merged
-    component; rows not in the map keep their own id (use a left join +
-    coalesce). Broadcastable: components only exist where duplicates do."""
-    edges = unique_id_edges(kb).union(alias_match_edges(kb, threshold)).distinct()
-    # KB-side alias graph is tiny: a small fixed partition count beats the
-    # input-proportional default (per-round task overhead dominates)
-    cc = connected_components_star(edges, num_partitions=4)
+    component; rows not in the map keep their own id (see
+    :func:`canonical_id`). Broadcastable: components only exist where
+    duplicates do."""
+    cc = connected_components_star(
+        unique_id_edges(kb).union(alias_match_edges(kb, threshold)))
     # one partition: every consumer broadcasts the map, and a cached
     # frame keeps its shuffle partition count (AQE does not coalesce it)
     return cc.select(F.col("node").alias("kb_id"),

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kglinker.graph.canonicalize import canonical_id
+
 __all__ = ["write_graph", "entity_table", "merged_entity_table",
            "MULTI_VALUED_COLS"]
 
@@ -49,12 +51,7 @@ def merged_entity_table(kb: DataFrame, canon: DataFrame | None = None,
     expressions (whole-stage codegen, no UDF)."""
     attrs = [c for c in kb.columns if c != "kb_id"]
     dtypes = dict(kb.dtypes)
-    if canon is not None:
-        kbj = (kb.join(F.broadcast(canon), "kb_id", "left")
-               .withColumn("entity_id", F.coalesce("canon_id", "kb_id"))
-               .drop("canon_id"))
-    else:
-        kbj = kb.withColumn("entity_id", F.col("kb_id"))
+    kbj = canonical_id(kb, canon, "entity_id")
     arr = F.array_sort(F.collect_list(F.struct("kb_id", *attrs)))
     grouped = kbj.groupBy("entity_id").agg(arr.alias("_m"),
                                            F.count(F.lit(1)).alias("n_members"))
@@ -79,14 +76,9 @@ def merged_entity_table(kb: DataFrame, canon: DataFrame | None = None,
 
 
 def entity_table(kb_scored: DataFrame, canon: DataFrame | None = None) -> DataFrame:
-    kb = kb_scored.select("kb_id", "type", "name", "wiki_url", "confidence")
-    if canon is not None:
-        kb = (kb.join(F.broadcast(canon), "kb_id", "left")
-                .withColumn("entity_id",
-                            F.coalesce("canon_id", "kb_id").cast("string"))
-                .drop("canon_id"))
-    else:
-        kb = kb.withColumn("entity_id", F.col("kb_id").cast("string"))
+    kb = canonical_id(
+        kb_scored.select("kb_id", "type", "name", "wiki_url", "confidence"),
+        canon, "entity_id").withColumn("entity_id", F.col("entity_id").cast("string"))
     # canonical representative = the row whose kb_id == entity_id; fall back
     # to max confidence inside the component
     from pyspark.sql.window import Window

@@ -21,10 +21,11 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from kglinker.graph.canonicalize import canonical_id
 from kglinker.runtime.partitioning import salted_count
 
 __all__ = ["mention_entities", "conversation_pairs", "entity_dim_triples",
@@ -61,24 +62,16 @@ def conversation_pairs(ents: DataFrame) -> DataFrame:
 def entity_dim_triples(kb_scored: DataFrame, canon: DataFrame | None = None) -> DataFrame:
     """entity_type + kb_uri triples from the KB (small side; no shuffle of
     the corpus). ``canon``: optional (kb_id, canon_id) mapping from
-    connected-components canonicalization."""
-    kb = kb_scored.select("kb_id", "type", "wiki_url")
-    if canon is not None:
-        kb = (kb.join(F.broadcast(canon), "kb_id", "left")
-                .withColumn("eid", F.coalesce("canon_id", "kb_id"))
-                .drop("canon_id"))
-    else:
-        kb = kb.withColumn("eid", F.col("kb_id"))
-    types = (kb.select(F.col("eid").cast("string").alias("subj"),
-                       F.lit("entity_type").alias("pred"),
-                       F.col("type").alias("obj"))
-             .dropDuplicates(["subj", "obj"]))
-    uris = (kb.filter(F.col("wiki_url") != "")
-            .select(F.col("eid").cast("string").alias("subj"),
-                    F.lit("kb_uri").alias("pred"),
-                    F.col("wiki_url").alias("obj"))
-            .dropDuplicates(["subj", "obj"]))
-    return (types.unionByName(uris)
+    connected-components canonicalization. Both facts come from one
+    inline explode and one dedup; a NULL type is kept, a NULL or empty
+    URL is not."""
+    kb = canonical_id(kb_scored.select("kb_id", "type", "wiki_url"), canon, "eid")
+    facts = F.array(
+        F.struct(F.lit("entity_type").alias("pred"), F.col("type").alias("obj")),
+        F.struct(F.lit("kb_uri").alias("pred"), F.col("wiki_url").alias("obj")))
+    return (kb.select(F.col("eid").cast("string").alias("subj"), F.inline(facts))
+            .filter((F.col("pred") == "entity_type") | (F.col("obj") != ""))
+            .dropDuplicates(["subj", "pred", "obj"])
             .withColumn("conv_id", F.lit(None).cast("string"))
             .withColumn("weight", F.lit(None).cast("long")))
 
@@ -105,15 +98,11 @@ def cooccurrence_triples(mentions: DataFrame,
     AQE skew split remains. Measured sf0.1: the attach join 1.9 s → map-
     side; kg_pipeline_triples wall 3.5 → ~2 s.
 
-    Eager: building the returned frame already runs two Spark jobs over
-    the whole upstream — the weight checkpoint and its count — so the
-    extraction behind ``mentions`` executes here, not when the edges are
-    written. ``pairs`` is persisted and stays persisted."""
-    ents = mention_entities(mentions)
-    if canon is not None:
-        ents = (ents.join(F.broadcast(canon), "kb_id", "left")
-                    .withColumn("kb_id", F.coalesce("canon_id", "kb_id"))
-                    .drop("canon_id"))
+    Eager: building the returned frame already runs the weight checkpoint
+    over the whole upstream, so the extraction behind ``mentions``
+    executes here, not when the edges are written. ``pairs`` is
+    persisted and stays persisted."""
+    ents = canonical_id(mention_entities(mentions), canon, "kb_id")
     # persist: pairs feeds BOTH the weight aggregation and the final edge
     # join — without it the upstream lineage (the mentions scan, or the
     # mapInArrow extraction when called on unmaterialized mentions) plus
@@ -122,13 +111,17 @@ def cooccurrence_triples(mentions: DataFrame,
     # conversation), so MEMORY_AND_DISK is cheap insurance.
     pairs = conversation_pairs(ents).persist(StorageLevel.MEMORY_AND_DISK)
     # weight via the salted two-stage agg (hot pairs spread over salts);
-    # materialize + count the per-edge aggregate (tiny: one row per
-    # distinct edge) to DECIDE the join strategy at the driver — see
-    # docstring; the fallback join is probe-side-skewed on hot pairs →
-    # AQE skew split (enabled in runtime.session) handles it
-    weighted = salted_count(pairs, ["subj", "obj"], salt_buckets=salt_buckets,
-                            weight_col="weight").localCheckpoint(eager=True)
-    if weighted.count() <= broadcast_edges_max:
+    # materialize the per-edge aggregate (tiny: one row per distinct edge)
+    # and observe its row count in the same job to DECIDE the join
+    # strategy at the driver — see docstring; the fallback join is
+    # probe-side-skewed on hot pairs → AQE skew split (enabled in
+    # runtime.session) handles it
+    obs = Observation()
+    weighted = (salted_count(pairs, ["subj", "obj"], salt_buckets=salt_buckets,
+                             weight_col="weight")
+                .observe(obs, F.count(F.lit(1)).alias("n"))
+                .localCheckpoint(eager=True))
+    if obs.get["n"] <= broadcast_edges_max:
         weighted = F.broadcast(weighted)
     edges = (pairs.join(weighted, ["subj", "obj"])
              .select("subj", F.lit("co_occurs_in_conv").alias("pred"),
@@ -139,7 +132,7 @@ def cooccurrence_triples(mentions: DataFrame,
 def build_triples(mentions: DataFrame, kb_scored: DataFrame,
                   canon: DataFrame | None = None) -> DataFrame:
     """Full triple set: dims ∪ co-occurrence edges. Eager like
-    :func:`cooccurrence_triples`: the weight checkpoint and count run
-    when this frame is built, and its persisted ``pairs`` stay cached."""
+    :func:`cooccurrence_triples`: the weight checkpoint runs when this
+    frame is built, and its persisted ``pairs`` stay cached."""
     return (entity_dim_triples(kb_scored, canon)
             .unionByName(cooccurrence_triples(mentions, canon)))

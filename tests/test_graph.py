@@ -20,7 +20,7 @@ def test_connected_components(spark):
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
         "src long, dst long")
     cc = {r["node"]: r["comp"]
-          for r in connected_components_star(edges, num_partitions=4).collect()}
+          for r in connected_components_star(edges).collect()}
     assert cc[1] == cc[2] == cc[3] == 1
     assert cc[10] == cc[11] == 10
     assert cc[20] == cc[21] == cc[22] == cc[23] == 20

@@ -38,8 +38,9 @@ def test_namelist_one_python_map_node(kb_scored):
 
 
 def test_canonical_map_job_count(spark, kb_scored):
-    """Star CC converges in O(log n) rounds; min-label propagation ran
-    46-48 Spark jobs for canonical_map on the fixture."""
+    """Star CC converges in O(log n) rounds of one checkpoint each, the
+    fixpoint signature observed by the same job: 14 Spark jobs for
+    canonical_map on the fixture."""
     sc = spark.sparkContext
     sc.setJobGroup("canonical-map-jobs", "canonical_map on the fixture")
     try:
@@ -47,7 +48,7 @@ def test_canonical_map_job_count(spark, kb_scored):
     finally:
         sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("canonical-map-jobs")
-    assert len(jobs) <= 36, f"{len(jobs)} jobs for canonical_map"
+    assert len(jobs) <= 16, f"{len(jobs)} jobs for canonical_map"
 
 
 @pytest.fixture(scope="module")

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import time
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kglinker.graph.canonicalize import connected_components_star
@@ -72,14 +74,8 @@ def test_checkpointer_single_job_per_run(spark, tmp_path):
         assert rec["n_rows_out"] == per_bucket.get(b, 0)
 
 
-def test_star_cc_equivalent_to_union_find(spark):
-    """large-star/small-star must produce the same components as a
-    plain-Python union-find on a deterministic random-ish graph."""
-    edges = (spark.range(3000)
-             .select((F.xxhash64("id") % 500).alias("src"),
-                     (F.xxhash64(F.col("id") + 1) % 500).alias("dst"))
-             .select(F.abs("src").alias("src"), F.abs("dst").alias("dst"))
-             .filter(F.col("src") != F.col("dst")))
+def _union_find(pairs) -> dict[int, int]:
+    """node → min node of its component, plain Python."""
     parent: dict[int, int] = {}
 
     def find(v: int) -> int:
@@ -89,13 +85,41 @@ def test_star_cc_equivalent_to_union_find(spark):
             v = parent[v]
         return v
 
-    for r in edges.collect():
-        a, b = find(r["src"]), find(r["dst"])
+    for src, dst in pairs:
+        a, b = find(src), find(dst)
         parent[max(a, b)] = min(a, b)
-    want = {v: find(v) for v in list(parent)}
+    return {v: find(v) for v in list(parent)}
+
+
+def test_star_cc_equivalent_to_union_find(spark):
+    """large-star/small-star must produce the same components as a
+    plain-Python union-find on a deterministic random-ish graph."""
+    edges = (spark.range(3000)
+             .select((F.xxhash64("id") % 500).alias("src"),
+                     (F.xxhash64(F.col("id") + 1) % 500).alias("dst"))
+             .select(F.abs("src").alias("src"), F.abs("dst").alias("dst"))
+             .filter(F.col("src") != F.col("dst")))
+    want = _union_find((r["src"], r["dst"]) for r in edges.collect())
     got = {r["node"]: r["comp"]
-           for r in connected_components_star(edges, num_partitions=8).collect()}
+           for r in connected_components_star(edges).collect()}
     assert got == want and len(got) > 100
+
+
+@settings(max_examples=6, deadline=None)
+@given(pairs=st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)),
+                      max_size=30),
+       loops=st.lists(st.integers(31, 35), max_size=3))
+def test_star_cc_matches_union_find_property(spark, pairs, loops):
+    """Star CC equals union-find on edge lists with self-loops, duplicate
+    edges and both orientations of an edge; a node whose only edges are
+    self-loops gets no label."""
+    edges = (pairs + [(b, a) for a, b in pairs[::2]] + pairs[:2]
+             + [(v, v) for v in loops])
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r["node"]: r["comp"]
+           for r in connected_components_star(df).collect()}
+    assert got == _union_find((a, b) for a, b in edges if a != b)
+    assert not set(loops) & set(got)
 
 
 def test_star_cc_long_path_converges_fast(spark):
@@ -104,7 +128,7 @@ def test_star_cc_long_path_converges_fast(spark):
     algorithm collapses it in O(log n) rounds."""
     path = spark.range(1999).select(F.col("id").alias("src"),
                                     (F.col("id") + 1).alias("dst"))
-    cc = connected_components_star(path, max_iter=20, num_partitions=8)
+    cc = connected_components_star(path, max_iter=20)
     got = cc.agg(F.countDistinct("comp").alias("c"),
                  F.count(F.lit(1)).alias("n")).collect()[0]
     assert got["c"] == 1 and got["n"] == 2000
