@@ -5,14 +5,20 @@ Spark re-expression of ``create_cedar.sh`` → ``KB2namelist.py`` →
 ``uniq_namelist.py``: one ``mapInArrow`` pass over the (small) KB does
 the per-row string work — P1/P3/P4 base surfaces, the G1–G10 generators
 and the P2 filter — with the :mod:`kglinker.kb.expand` kernels, the one
-definition of a surface's normal form; the A1 group-merge and A2
+definition of a surface's normal form, and carries each row's
+``confidence`` out with its surfaces; the A1 group-merge and A2
 confidence ordering are a single ``groupBy(surface)`` with a
 ``sort_array(struct(-confidence, kb_id))`` — exactly the reference's
 "order candidate ids by KB CONFIDENCE desc, fragment sentinel last"
-(``uniq_namelist.py:52-104``).
+(``uniq_namelist.py:52-104``). The subname map is the same shape: one
+``mapInArrow`` pass, one ``groupBy(subname)``.
+
+Both Python passes run over the scored KB's own partitions (``score_kb``
+does not repartition), once per frame, with no join and no Python-fed
+side input: the G11/P7 constant rows are a local table.
 
 Scale: the KB is the *small* side of this engine (10^6–10^8 rows vs 10^12
-turns). The namelist build is a one-shuffle batch job whose output is
+turns). Each build is a one-shuffle batch job whose output is
 collected to the driver once per KB snapshot to compile the matching
 automaton (see :mod:`kglinker.automaton.build`) — the Spark analogue of the
 reference's offline ``create_cedar.sh`` automaton compilation.
@@ -21,9 +27,9 @@ reference's offline ``create_cedar.sh`` automaton compilation.
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from kglinker.data.wordlists import (ALLOWLIST, NATIONALITIES, PRONOUNS,
                                      STOPLIST)
@@ -31,9 +37,6 @@ from kglinker.kb import expand as X
 
 __all__ = ["build_namelist", "build_subname_map", "build_uri_namelist",
            "nationality_forms"]
-
-_VARIANT_SCHEMA = T.ArrayType(T.StringType())
-
 
 def nationality_forms() -> set[str]:
     """All P7 nationality variants (natToKB.py:12-30)."""
@@ -46,12 +49,6 @@ def _stop_variants() -> set[str]:
     for s in STOPLIST:
         out.update({s, s.lower(), s.upper(), s[:1].upper() + s[1:].lower()})
     return out
-
-
-@F.pandas_udf(_VARIANT_SCHEMA)
-def _gen_subnames(name: pd.Series) -> pd.Series:
-    """G9 fragment extraction of the P3-normalized NAME, Arrow-batched."""
-    return pd.Series([X.subnames(X.normalize_ws(n)) for n in name])
 
 
 def _ranked_ids() -> F.Column:
@@ -102,13 +99,27 @@ def _inflections(surface: str, base: str, gender: str,
 
 _ROW_COLS = ("kb_id", "type", "gender", "confidence", "name", "aliases",
              "redirects", "country", "source_loc", "description")
-_SURFACE_DDL = "surface string, kb_id long, type string, is_fragment boolean"
+_SURFACE_SCHEMA = pa.schema([("surface", pa.string()), ("kb_id", pa.int64()),
+                             ("type", pa.string()), ("is_fragment", pa.bool_()),
+                             ("confidence", pa.float64())])
+_SURFACE_DDL = ("surface string, kb_id long, type string, is_fragment boolean, "
+                "confidence double")
+_SUBNAME_SCHEMA = pa.schema([("subname", pa.string()), ("kb_id", pa.int64()),
+                             ("confidence", pa.float64())])
+_SUBNAME_DDL = "subname string, kb_id long, confidence double"
+
+
+def _record_batch(rows: list[tuple], schema: pa.Schema) -> pa.RecordBatch:
+    cols = list(zip(*rows)) if rows else [[]] * len(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(v, type=f.type) for v, f in zip(cols, schema)],
+        schema=schema)
 
 
 def _surface_batches(batches, inflection_floor: float | None,
                      vocative: bool):
-    """Scored KB rows → ``(surface, kb_id, type, is_fragment)``: the
-    P1/P4 base surfaces (NAME + ALIASES + REDIRECTS, tags and word flags
+    """Scored KB rows → ``(surface, kb_id, type, is_fragment, confidence)``:
+    the P1/P4 base surfaces (NAME + ALIASES + REDIRECTS, tags and word flags
     stripped, KB2namelist.py:146-165,407) + G1–G7 variants of the
     P3-normalized NAME + G8 inflections of every base surface (rows at or
     above ``inflection_floor``) minus P2-unsuitable forms
@@ -117,10 +128,8 @@ def _surface_batches(batches, inflection_floor: float | None,
     surname as a direct entry at confidence ≥ 20, ≥ 15 for fictional
     persons (KB2namelist.py:452-474). One Python pass per batch; kb_id
     stays null on fragments — fragment→candidate mapping lives in the
-    separate subname map (D7), like the reference's namedict."""
-    import pyarrow as pa
-    schema = pa.schema([("surface", pa.string()), ("kb_id", pa.int64()),
-                        ("type", pa.string()), ("is_fragment", pa.bool_())])
+    separate subname map (D7), like the reference's namedict. Each entry
+    carries its row's ``confidence`` for the A2 ordering."""
     allow = frozenset(ALLOWLIST)
     for rb in batches:
         out: list[tuple] = []
@@ -138,19 +147,29 @@ def _surface_batches(batches, inflection_floor: float | None,
                                             and conf >= inflection_floor):
                 for s in bases:
                     forms |= _inflections(s, base, g or "", vocative)
-            out += [(s, kb_id, t, False) for s in forms
+            out += [(s, kb_id, t, False, conf) for s in forms
                     if not X.is_unsuitable(s, etype, allow)]
             if etype.startswith("person"):
-                out += [(s, None, "person", True) for s in X.subnames(name)]
+                out += [(s, None, "person", True, None)
+                        for s in X.subnames(name)]
                 surname = name.split(" ")[-1]
                 thresh = 15.0 if etype == "person:fictional" else 20.0
                 if (len(surname) >= 2 and surname[0] == surname[0].upper()
                         and conf is not None and conf >= thresh):
-                    out.append((surname, kb_id, t, False))
-        cols = list(zip(*out)) if out else [[]] * len(schema)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(v, type=f.type) for v, f in zip(cols, schema)],
-            schema=schema)
+                    out.append((surname, kb_id, t, False, conf))
+        yield _record_batch(out, _SURFACE_SCHEMA)
+
+
+def _subname_batches(batches):
+    """Scored person rows → ``(subname, kb_id, confidence)``: the G9
+    fragments of the P3-normalized NAME (the ``oracle_subnames`` rule)."""
+    for rb in batches:
+        cols = [rb.column(c).to_pylist() for c in ("kb_id", "confidence",
+                                                    "name")]
+        yield _record_batch(
+            [(s, kb_id, conf) for kb_id, conf, raw in zip(*cols)
+             for s in X.subnames(X.normalize_ws(raw or ""))],
+            _SUBNAME_SCHEMA)
 
 
 def build_namelist(kb_scored: DataFrame,
@@ -160,9 +179,10 @@ def build_namelist(kb_scored: DataFrame,
     ``(surface, kb_ids: array<long> conf-desc-ordered, is_fragment: bool)``.
 
     Every per-row surface (P1–P4, G1–G10, the P2 filter) comes out of
-    one ``mapInArrow`` pass (:func:`_surface_batches`); the G11 pronouns,
-    P7 nationality forms, P6 stoplist demotion and the A1/A2 merge are
-    Spark.
+    one ``mapInArrow`` pass (:func:`_surface_batches`) over the scored
+    KB's partitions, with its row's confidence; the G11 pronouns and P7
+    nationality forms are a local table unioned in, and the P6 stoplist
+    demotion and the A1/A2 merge are one ``groupBy(surface)`` — no join.
 
     ``inflection_min_confidence``: optional floor — rows below it skip G8
     declension generation (their nominative surfaces still enter). The
@@ -185,13 +205,16 @@ def build_namelist(kb_scored: DataFrame,
                                                          bool(vocative)),
                              _SURFACE_DDL))
 
-    # G11 pronouns + P7 nationality forms → fragment, senseless rows
+    # G11 pronouns + P7 nationality forms → fragment, senseless rows. From
+    # pandas, so they plan as a LocalTableScan: a list of tuples would be a
+    # Python-fed RDD scan with its own Python tasks.
     spark = kb_scored.sparkSession
-    extra = spark.createDataFrame(
-        [(p, None, "pronoun", True) for p in
+    extra = spark.createDataFrame(pd.DataFrame(
+        [(p, None, "pronoun", True, None) for p in
          sorted({w for p in PRONOUNS for w in (p, p[:1].upper() + p[1:])})]
-        + [(n, None, "nationality", True) for n in sorted(nationality_forms())],
-        _SURFACE_DDL)
+        + [(n, None, "nationality", True, None)
+           for n in sorted(nationality_forms())],
+        columns=_SURFACE_SCHEMA.names), _SURFACE_DDL)
     all_rows = generated.unionByName(extra)
 
     # P6 stoplist: demote to fragment-only (uniq_namelist.py:33-39)
@@ -201,13 +224,8 @@ def build_namelist(kb_scored: DataFrame,
     ).withColumn(
         "is_fragment", F.when(F.col("surface").isin(stop), F.lit(True)).otherwise(F.col("is_fragment")))
 
-    # A1 group-merge + A2 confidence-desc candidate ordering. conf is a
-    # projection of the ENTIRE scored KB — no broadcast hint (r4 verdict
-    # #3): at 10^7–10^8-row KBs a forced broadcast is a driver/executor
-    # memory failure point; size-based selection + AQE choose.
-    conf = kb_scored.select("kb_id", "confidence")
+    # A1 group-merge + A2 confidence-desc candidate ordering
     return (all_rows
-            .join(conf, "kb_id", "left")
             .groupBy("surface")
             .agg(_ranked_ids().alias("kb_ids"),
                  F.max(F.col("is_fragment").cast("int")).cast("boolean")
@@ -235,10 +253,12 @@ def build_uri_namelist(kb_scored: DataFrame) -> DataFrame:
 def build_subname_map(kb_scored: DataFrame) -> DataFrame:
     """D7 coref support: subname → confidence-desc-ordered person kb_ids —
     the reference's pickled ``namedict`` / ``people_named``
-    (``ner_knowledge_base.py:103-167``). Broadcast next to the automaton."""
+    (``ner_knowledge_base.py:103-167``). Broadcast next to the automaton.
+    One ``mapInArrow`` pass (:func:`_subname_batches`) over the person
+    rows, one ``groupBy(subname)``."""
     persons = kb_scored.filter(F.col("type").startswith("person"))
     return (persons
-            .select("kb_id", "confidence",
-                    F.explode(_gen_subnames(F.col("name"))).alias("subname"))
+            .select("kb_id", "confidence", "name")
+            .mapInArrow(_subname_batches, _SUBNAME_DDL)
             .groupBy("subname")
             .agg(_ranked_ids().alias("kb_ids")))

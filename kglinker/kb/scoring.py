@@ -11,16 +11,21 @@ Reimplements the formulas of ``/root/reference/metrics_knowledge_base.py``:
 - ``confidence = wavg([score_wiki, score_metrics], [5, 1])`` (``:395-398``),
   all emitted with 2-decimal rounding (``"%.2f"``, ``:389-398``).
 
-Spark-first: one ``Window.partitionBy('type')`` supplies every per-type max —
-a single shuffle over the (small) KB; everything else is column arithmetic
-inside whole-stage codegen. At 10^8-row KB scale this is still one shuffle
-keyed by ``type`` (~10 distinct values → AQE coalesces; skew is irrelevant
-because the aggregate state is 5 doubles per type).
+Spark-first: the five per-type maxima come from one ``groupBy('type')``
+aggregate — one row per type, so it is broadcast and joined back null-safe
+(a NULL type is its own group, as it would be in a window). Only the
+aggregate's partial state (5 doubles per type and input partition) is
+shuffled; the KB rows themselves never move, so the scored frame keeps
+its input's partitioning and every downstream Python pass runs over the
+KB's own partitions. A ``Window.partitionBy('type')`` would hash every row
+into ~10 type partitions: one core per type, and the largest type (persons)
+on one core. The price is a second scan of the input for the aggregate.
+Everything else is column arithmetic inside whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["score_kb", "METRIC_COLS"]
@@ -32,11 +37,11 @@ WIKI_WEIGHTS = [5.0, 5.0, 1.0]
 METRIC_COLS = ["description_length", "columns_number"]
 
 
-def _norm(col: str, deflate: float, w: Window) -> F.Column:
+def _norm(col: str, deflate: float) -> F.Column:
     # NULL metric ⇒ 0 contribution (metrics_knowledge_base.py insert_metrics
     # leaves the score term at 0 when the stat is absent); without the guard
     # least(NULL/max, 1.0) would return 1.0 because least() skips nulls.
-    mx = F.max(F.col(col)).over(w) * F.lit(deflate)
+    mx = F.col(f"_mx_{col}") * F.lit(deflate)
     return F.when(F.col(col).isNull() | (mx <= 0), F.lit(0.0)).otherwise(
         F.least(F.col(col) / mx, F.lit(1.0))
     )
@@ -44,8 +49,6 @@ def _norm(col: str, deflate: float, w: Window) -> F.Column:
 
 def score_kb(kb: DataFrame) -> DataFrame:
     """kb → kb + (score_wiki, score_metrics, confidence), the S7 sink input."""
-    w = Window.partitionBy("type")
-
     # description_length / columns_number raw metrics
     # (metrics_knowledge_base.py:298-311) — the reference's nonempty_columns
     # excludes the wiki metric columns (and any score columns) so a row with
@@ -53,17 +56,24 @@ def score_kb(kb: DataFrame) -> DataFrame:
     excluded = {"kb_id"} | {c for c, _ in WIKI_METRICS} \
         | {"score_wiki", "score_metrics", "confidence"}
     non_id_cols = [c for c in kb.columns if c not in excluded]
-    cols_number = sum(
-        (F.when(F.col(c).cast("string").isNotNull() & (F.col(c).cast("string") != ""), 1)
-          .otherwise(0))
-        for c in non_id_cols
-    )
+    # one SQL expression, not a Column builder per column (each is a py4j
+    # round trip); NULL <> '' is NULL, so a NULL cell counts 0
+    cols_number = " + ".join(
+        f"CASE WHEN CAST(`{c}` AS STRING) <> '' THEN 1 ELSE 0 END"
+        for c in non_id_cols)
     df = kb.withColumn("description_length",
                        F.length(F.coalesce(F.col("description"), F.lit(""))).cast("double")
-                       ).withColumn("columns_number", cols_number.cast("double"))
+                       ).withColumn("columns_number",
+                                    F.expr(cols_number).cast("double"))
 
-    wiki_norms = [_norm(c, d, w) for c, d in WIKI_METRICS]
-    metric_norms = [_norm(c, 1.0, w) for c in METRIC_COLS]
+    metrics = [c for c, _ in WIKI_METRICS] + METRIC_COLS
+    maxima = df.groupBy(F.col("type").alias("_mx_type")).agg(
+        *(F.max(c).alias(f"_mx_{c}") for c in metrics))
+    df = df.join(F.broadcast(maxima),
+                 F.col("type").eqNullSafe(F.col("_mx_type")))
+
+    wiki_norms = [_norm(c, d) for c, d in WIKI_METRICS]
+    metric_norms = [_norm(c, 1.0) for c in METRIC_COLS]
 
     # no backlinks stat at all ⇒ score_wiki = 0 (reference
     # metrics_knowledge_base.py insert_metrics: the wiki score is only
@@ -83,4 +93,5 @@ def score_kb(kb: DataFrame) -> DataFrame:
             .withColumn("score_wiki", F.round(score_wiki, 2))
             .withColumn("score_metrics", F.round(score_metrics, 2))
             .withColumn("confidence", F.round(confidence, 2))
-            .drop("description_length", "columns_number"))
+            .drop("description_length", "columns_number", "_mx_type",
+                  *(f"_mx_{c}" for c in metrics)))

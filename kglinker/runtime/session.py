@@ -10,8 +10,9 @@ loaded once per executor — the Spark-native analogue of the reference's
 Scale notes (100 TB / 1000 executors):
 - AQE on: runtime coalescing + skew-join splitting backstops the explicit
   salting done in :mod:`kglinker.runtime.partitioning`.
-- Arrow on: every Python-side operator in this engine is an Arrow-batched
-  pandas UDF (never per-row Python), so Arrow transfer is the hot path.
+- Arrow on: every Python-side operator in this engine takes Arrow batches
+  (``mapInArrow``, ``mapInPandas``, ``applyInPandasWithState``; never
+  per-row Python), so Arrow transfer is the hot path.
 - ``spark.sql.shuffle.partitions`` defaults to 2×cores locally; on a real
   cluster AQE coalesces from a deliberately high initial number.
 """

@@ -1,14 +1,15 @@
-"""KB-snapshot compile: the plan shape of the namelist build and the
-canonical map, and their parity with the plain-Python oracles on a KB
-larger than the 29-row fixture and on names that need P3/P4
-normalization, and the G10 bare-surname thresholds."""
+"""KB-snapshot compile: the plan shape and job count of scoring, the
+namelist and subname builds and the canonical map, and their parity with
+the plain-Python oracles on a KB larger than the 29-row fixture and on
+names that need P3/P4 normalization, and the G10 bare-surname
+thresholds."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from kglinker.data.kb_fixture import KB_COLUMNS, KB_ROWS, KB_SCHEMA
+from kglinker.data.kb_fixture import KB_COLUMNS, KB_ROWS, KB_SCHEMA, kb_df
 from kglinker.graph.canonicalize import canonical_map
 from kglinker.jobs.kb_scale_probe import _rows as synthetic_kb_rows
 from kglinker.kb.names import build_namelist, build_subname_map
@@ -21,7 +22,16 @@ ID_OFFSET = 1_000_000
 
 
 def _final_plan(df) -> str:
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    """The executed plan's own operators: the adaptive final plan, with the
+    lineage under an ``InMemoryRelation`` (a cached input's plan) elided."""
+    own, cached_at = [], None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        at = len(line) - len(line.lstrip(" :|+-"))
+        if cached_at is not None and at > cached_at:
+            continue
+        cached_at = at if "InMemoryRelation" in line else None
+        own.append(line)
+    plan = "\n".join(own)
     if "== Final Plan ==" in plan:
         plan = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
     return plan
@@ -35,6 +45,55 @@ def test_namelist_one_python_map_node(kb_scored):
     plan = _final_plan(nl)
     assert plan.count("MapInArrow") == 1, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_subname_map_one_python_map_node(kb_scored):
+    """The G9 subname map crosses the Python boundary once, as a
+    MapInArrow over the person rows: no pandas UDF node."""
+    sub = build_subname_map(kb_scored)
+    sub.collect()
+    plan = _final_plan(sub)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+def test_namelist_no_join_no_python_fed_scan(kb_scored):
+    """Confidence rides out of the surface pass, so the A2 ordering needs no
+    join back to the KB, and the G11/P7 constant rows are a local table,
+    not a Python-fed RDD scan with Python tasks of its own."""
+    nl = build_namelist(kb_scored)
+    nl.collect()
+    plan = _final_plan(nl)
+    assert "Join" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_score_kb_no_window(spark):
+    """The per-type maxima are a broadcast aggregate, not a window that
+    hash-partitions every KB row by type."""
+    scored = score_kb(kb_df(spark))
+    scored.collect()
+    plan = _final_plan(scored)
+    assert "Window" not in plan, plan
+
+
+def test_kb_names_job_count(spark, kb_scored):
+    """Namelist and subname map cached and counted, as a KB snapshot
+    compile does: 8 Spark jobs on the fixture."""
+    sc = spark.sparkContext
+    sc.setJobGroup("kb-names-jobs", "namelist + subname map on the fixture")
+    nl = build_namelist(kb_scored).cache()
+    sub = build_subname_map(kb_scored).cache()
+    try:
+        nl.count()
+        sub.count()
+    finally:
+        sc.setJobGroup(None, None)
+        nl.unpersist()
+        sub.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup("kb-names-jobs")
+    assert len(jobs) <= 8, f"{len(jobs)} jobs for the namelist + subname map"
 
 
 def test_canonical_map_job_count(spark, kb_scored):
@@ -58,6 +117,18 @@ def larger_kb(spark):
     scored = score_kb(spark.createDataFrame(rows, KB_SCHEMA)).cache()
     yield [dict(zip(KB_COLUMNS, r)) for r in rows], scored
     scored.unpersist()
+
+
+def test_score_kb_keeps_input_partitions(spark):
+    """Scoring moves no KB row: on the fixture plus 1,000 synthetic rows
+    (persons are 90% of them) the scored frame has its input's partition
+    count, so no Python pass downstream runs one type per core."""
+    rows = list(KB_ROWS) + [(r[0] + ID_OFFSET,) + tuple(r[1:])
+                            for r in synthetic_kb_rows(1000)]
+    kb = spark.createDataFrame(rows, KB_SCHEMA)
+    n_in = kb.rdd.getNumPartitions()
+    assert n_in != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert score_kb(kb).rdd.getNumPartitions() == n_in
 
 
 def test_namelist_matches_oracle_beyond_fixture(larger_kb):
