@@ -12,12 +12,12 @@ reimplement the relational logic of :mod:`kglinker.graph`.
 
 from __future__ import annotations
 
-import re
 from collections import defaultdict
 
 import pandas as pd
 
 from kglinker.data.kb_fixture import kb_rows_as_dicts
+from kglinker.oracle_kb import k1_surfaces
 from kglinker.oracle_matcher import OracleLinker
 
 __all__ = ["oracle_canonical_map", "oracle_mentions", "oracle_triples",
@@ -38,17 +38,6 @@ def oracle_mentions(transcripts: pd.DataFrame,
         rows.extend(linker.annotate(str(conv), turns))
     return pd.DataFrame(rows, columns=_MENTION_COLS)
 
-_TAG = re.compile(r"#(?:lang|ntype)=[^#|]*")
-
-
-def _surfaces(row: dict) -> set[str]:
-    out = {row["name"]}
-    for a in (row.get("aliases") or "").split("|"):
-        a = _TAG.sub("", a).strip()
-        if a:
-            out.add(a)
-    return out
-
 
 def oracle_canonical_map(kb_rows: list[dict] | None = None,
                          threshold: int = 2) -> dict[int, int]:
@@ -62,7 +51,7 @@ def oracle_canonical_map(kb_rows: list[dict] | None = None,
             if ux and ux == uy:
                 edges.append((a, b))
                 continue
-            if _surfaces(x) & _surfaces(y):
+            if k1_surfaces(x) & k1_surfaces(y):
                 score = 2 if (ux and ux == uy) else 0
                 if ux and uy and ux != uy:
                     score -= 1000

@@ -23,8 +23,8 @@ from kglinker.data.wordlists import (ALLOWLIST, NATIONALITIES, PRONOUNS,
 from kglinker.kb import expand as X
 from kglinker.oracle_matcher import oracle_confidence
 
-__all__ = ["oracle_namelist", "oracle_subnames", "oracle_alias_edges",
-           "oracle_merged_entities"]
+__all__ = ["oracle_namelist", "oracle_subnames", "k1_surfaces",
+           "oracle_alias_edges", "oracle_merged_entities"]
 
 _MULTI = ("aliases", "redirects", "jobs", "nationality")
 
@@ -168,13 +168,11 @@ def oracle_subnames(kb_rows: list[dict]) -> list[dict]:
                   key=lambda d: d["subname"])
 
 
-def _surfaces_for_match(r: dict) -> set[str]:
-    out = {r["name"]}
-    for a in (r.get("aliases") or "").split("|"):
-        a = X.strip_name_tags(a)
-        if a:
-            out.add(a)
-    return out
+def k1_surfaces(r: dict) -> set[str]:
+    """K1 match keys: the P1/P4 base surfaces (``strip_name_tags``) of the
+    name and every alias (SURVEY §2.7; ``kb_compare.py:183-212``)."""
+    return {X.strip_name_tags(s) for s in
+            [r["name"], *(r.get("aliases") or "").split("|")]} - {""}
 
 
 def oracle_alias_edges(kb_rows: list[dict], threshold: int = 2) -> list[dict]:
@@ -186,7 +184,7 @@ def oracle_alias_edges(kb_rows: list[dict], threshold: int = 2) -> list[dict]:
             a, b = int(x["kb_id"]), int(y["kb_id"])
             src, dst = min(a, b), max(a, b)
             xs, ys = (x, y) if a < b else (y, x)
-            if not (_surfaces_for_match(xs) & _surfaces_for_match(ys)):
+            if not (k1_surfaces(xs) & k1_surfaces(ys)):
                 continue
             ux, uy = xs.get("wiki_url") or "", ys.get("wiki_url") or ""
             score = 0
