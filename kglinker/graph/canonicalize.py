@@ -1,17 +1,23 @@
-"""Entity canonicalization: alias-resolution joins + connected components
+"""Entity canonicalization: one K1 blocking index + connected components
 (SURVEY §2.7, reference ``NER/KnowBase/kb_compare.py``).
 
 Match rules re-expressed relationally:
 
-- **K2 unique-id equijoin** (``kb_compare.py:254-272``): two KB rows sharing
-  ``wiki_url`` are the same entity. The inverted index the reference builds
-  (K1, ``:183-212``) *is* the join.
-- **K3 alias-candidate scoring** (``kb_compare.py:274-330``): candidate
-  pairs via any shared name/alias surface; score +1 per equal OTHER field
-  (type, country, location, dates); a contradiction on the unique field
-  (both URLs present and different) scores −1000; pairs with
-  ``score ≥ threshold`` match. Candidate argmax per left row via a window.
-- **CC merge** (north_star): the union of K2/K3 match edges is collapsed by
+- **K1 inverted index** (``kb_compare.py:183-212``): one explode of each
+  KB row into its keys — the non-empty ``wiki_url`` (K2) and every
+  name/alias surface (K3), a surface being the P1/P4 base surface of
+  :func:`kglinker.kb.expand.strip_name_tags`. Every key row carries the
+  URL and the five compared attributes, so one self-join on the key and
+  one ``groupBy(src, dst)`` give each candidate pair with ``same_url``,
+  ``shares_surface`` and its K3 score: the index *is* the join (token
+  blocking, a block per key, as in SparkER).
+- **K3 score** (``kb_compare.py:274-330``): +1 per equal non-empty OTHER
+  field (type, country, location, dates), +2 for equal non-empty URLs,
+  −1000 when both URLs are present and differ.
+- **Match edges**: ``same_url ∨ (shares_surface ∧ score ≥ threshold)``;
+  all of them feed CC. Only :func:`alias_match_edges` reduces the surface
+  pairs to the best candidate per left row (argmax window).
+- **CC merge** (north_star): the match edges are collapsed by
   alternating large-star / small-star rounds (Kiveris et al.) —
   O(log n) DataFrame iterations whatever the graph's diameter, each one
   eager checkpoint that also observes its own fixpoint signature. The
@@ -28,72 +34,62 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-__all__ = ["unique_id_edges", "alias_match_edges",
-           "connected_components_star", "canonical_id", "canonical_map"]
+__all__ = ["alias_match_edges", "connected_components_star",
+           "canonical_id", "canonical_map"]
+
+_ATTRS = ("type", "country", "location", "date_of_birth", "founded")
+# Python's \s spelled out: Java's \s is ASCII-only, and even under (?U)
+# it misses \x1c-\x1f
+_WS = "".join(f"\\u{c:04x}" for c in range(0x10000) if chr(c).isspace())
 
 
-def unique_id_edges(kb: DataFrame) -> DataFrame:
-    """K2: (src, dst) edges between rows sharing a non-empty wiki_url."""
-    u = kb.filter(F.coalesce(F.col("wiki_url"), F.lit("")) != "") \
-          .select("kb_id", "wiki_url")
-    a, b = u.alias("a"), u.alias("b")
-    return (a.join(b, (F.col("a.wiki_url") == F.col("b.wiki_url"))
+def _surface_key(s: F.Column) -> F.Column:
+    """:func:`kglinker.kb.expand.strip_name_tags` as a Spark expression."""
+    s = F.regexp_replace(s, r"#(?:lang|ntype)=[^#|]*", "")
+    s = F.regexp_replace(s, f"#[A-Za-z0-9]E?(?![^{_WS}])", "")
+    s = F.regexp_replace(s, "[\u200b\u200c\u200d\ufeff]", "")
+    # after the collapse the only whitespace left is ' ', which trim drops
+    return F.trim(F.regexp_replace(s, f"[{_WS}]+", " "))
+
+
+def _pairs(kb: DataFrame) -> DataFrame:
+    """(src < dst, same_url, shares_surface, score) for every pair of KB
+    rows that share a K1 key."""
+    url = F.coalesce(F.col("wiki_url"), F.lit(""))
+    surfaces = F.concat(F.array("name"),
+                        F.split(F.coalesce("aliases", F.lit("")), r"\|"))
+    keys = F.array_distinct(F.concat(
+        F.array(F.struct(F.lit(True).alias("is_url"), url.alias("key"))),
+        F.transform(surfaces, lambda s: F.struct(
+            F.lit(False).alias("is_url"), _surface_key(s).alias("key")))))
+    idx = (kb.select("kb_id", url.alias("url"), *_ATTRS, F.inline(keys))
+           .filter(F.col("key") != ""))
+    a, b = idx.alias("a"), idx.alias("b")
+    ua, ub = F.col("a.url"), F.col("b.url")
+    # a missing field is unknown, not a match: two url-less rows sharing a
+    # surface get no url bonus (kb_compare.py:300-310)
+    score = (sum(F.when((F.col(f"a.{c}") != "")
+                        & (F.col(f"a.{c}") == F.col(f"b.{c}")), 1).otherwise(0)
+                 for c in _ATTRS)
+             + F.when((ua != "") & (ub != ""),
+                      F.when(ua == ub, 2).otherwise(-1000)).otherwise(0))
+    return (a.join(b, (F.col("a.is_url") == F.col("b.is_url"))
+                   & (F.col("a.key") == F.col("b.key"))
                    & (F.col("a.kb_id") < F.col("b.kb_id")))
-            .select(F.col("a.kb_id").alias("src"), F.col("b.kb_id").alias("dst")))
-
-
-def _surfaces(kb: DataFrame) -> DataFrame:
-    """K1 inverted index input: kb_id → each name/alias surface."""
-    arr = F.array_union(
-        F.array(F.col("name")),
-        F.split(F.coalesce(F.col("aliases"), F.lit("")), r"\|"))
-    return (kb.select("kb_id", F.explode(arr).alias("surface"))
-            .withColumn("surface", F.trim(F.regexp_replace(
-                "surface", r"#(?:lang|ntype)=[^#|]*", "")))
-            .filter(F.col("surface") != ""))
+            .groupBy(F.col("a.kb_id").alias("src"), F.col("b.kb_id").alias("dst"))
+            .agg(F.max("a.is_url").alias("same_url"),
+                 F.max(~F.col("a.is_url")).alias("shares_surface"),
+                 F.max(score).alias("score")))
 
 
 def alias_match_edges(kb: DataFrame, threshold: int = 2) -> DataFrame:
-    """K3: candidates via shared surface, scored on equal other fields,
-    unique-field contradiction −1000, threshold + per-left argmax."""
-    s = _surfaces(kb)
-    cand = (s.alias("a").join(s.alias("b"),
-                              (F.col("a.surface") == F.col("b.surface"))
-                              & (F.col("a.kb_id") < F.col("b.kb_id")))
-            .select(F.col("a.kb_id").alias("src"), F.col("b.kb_id").alias("dst"))
-            .distinct())
-    attrs = kb.select("kb_id", "type", "country", "location", "wiki_url",
-                      "date_of_birth", "founded")
-    j = (cand
-         .join(attrs.alias("x"), cand.src == F.col("x.kb_id"))
-         .join(attrs.alias("y"), cand.dst == F.col("y.kb_id")))
-
-    def eq(c: str) -> F.Column:
-        xv, yv = F.col(f"x.{c}"), F.col(f"y.{c}")
-        return F.when(xv.isNotNull() & yv.isNotNull() & (xv != "")
-                      & (yv != "") & (xv == yv), 1).otherwise(0)
-
-    contradiction = F.when(
-        (F.coalesce(F.col("x.wiki_url"), F.lit("")) != "")
-        & (F.coalesce(F.col("y.wiki_url"), F.lit("")) != "")
-        & (F.col("x.wiki_url") != F.col("y.wiki_url")), -1000).otherwise(0)
-    # +2 only for equal NON-EMPTY urls: two url-less rows sharing a surface
-    # must not auto-merge (kb_compare.py treats a missing unique field as
-    # unknown, not as a match)
-    url_bonus = F.when(
-        (F.coalesce(F.col("x.wiki_url"), F.lit("")) != "")
-        & (F.coalesce(F.col("y.wiki_url"), F.lit("")) != "")
-        & (F.col("x.wiki_url") == F.col("y.wiki_url")), 2).otherwise(0)
-    score = (eq("type") + eq("country") + eq("location")
-             + eq("date_of_birth") + eq("founded")
-             + url_bonus
-             + contradiction)
-    scored = j.select("src", "dst", score.alias("score")) \
-              .filter(F.col("score") >= threshold)
-    # greedy best-candidate per left row (kb_compare.py:312-330)
+    """K3 edges: surface-sharing pairs with ``score ≥ threshold``, reduced
+    to the greedy best candidate per left row (kb_compare.py:312-330)."""
     w = Window.partitionBy("src").orderBy(F.desc("score"), F.asc("dst"))
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1).drop("_rn", "score"))
+    return (_pairs(kb)
+            .filter(F.col("shares_surface") & (F.col("score") >= threshold))
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1).select("src", "dst"))
 
 
 def _settle(e: DataFrame) -> tuple[DataFrame, tuple]:
@@ -171,8 +167,9 @@ def canonical_map(kb: DataFrame, threshold: int = 2) -> DataFrame:
     component; rows not in the map keep their own id (see
     :func:`canonical_id`). Broadcastable: components only exist where
     duplicates do."""
-    cc = connected_components_star(
-        unique_id_edges(kb).union(alias_match_edges(kb, threshold)))
+    cc = connected_components_star(_pairs(kb).filter(
+        F.col("same_url")
+        | (F.col("shares_surface") & (F.col("score") >= threshold))))
     # one partition: every consumer broadcasts the map, and a cached
     # frame keeps its shuffle partition count (AQE does not coalesce it)
     return cc.select(F.col("node").alias("kb_id"),

@@ -20,14 +20,17 @@ Reference flow → here:
   emit per-field merged rows (kb1 primary, kb2 fills empties; multi-valued
   fields union), unmatched kb1 AND kb2 rows are appended.
 
-Scale: both KBs are small sides; every join is value-keyed (shared
-surfaces / unique ids), never cross. The merge is one groupBy over
-matched pairs.
+One K1 index per KB (``kb_compare.py:183-212``): every raw value of the
+unique and relation fields, tagged by field. One kb1×kb2 join on the
+value tags each hit with its ``(f1, f2)`` relation, and one
+``groupBy(id1, id2)`` yields the unique links and the name weights (a
+value repeated in a row counts once per occurrence). Never a cross join.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections import Counter
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,15 +53,18 @@ class MatchConfig:
     id_col: str = "kb_id"
 
 
-def _values(kb: DataFrame, col: str, cfg: MatchConfig, out: str) -> DataFrame:
-    """(id, value) pairs for a field; multi-valued fields explode on the
-    delimiter; empty values dropped."""
-    c = F.coalesce(F.col(col).cast("string"), F.lit(""))
-    if col in cfg.multi_fields:
-        vals = F.explode(F.split(c, r"\|"))
-    else:
-        vals = c
-    return (kb.select(F.col(cfg.id_col).alias(out), vals.alias("value"))
+def _index(kb: DataFrame, fields: list, cfg: MatchConfig,
+           side: str) -> DataFrame:
+    """K1 index of one KB: an ``(id<side>, f<side>, value)`` row per
+    non-empty raw value of each field; multi-valued fields split on the
+    delimiter and keep repeated values."""
+    def tagged(f: str) -> F.Column:
+        c = F.coalesce(F.col(f).cast("string"), F.lit(""))
+        vals = F.split(c, r"\|") if f in cfg.multi_fields else F.array(c)
+        return F.transform(vals, lambda v: F.struct(
+            F.lit(f).alias(f"f{side}"), v.alias("value")))
+    return (kb.select(F.col(cfg.id_col).alias(f"id{side}"),
+                      F.inline(F.concat(*map(tagged, fields))))
             .filter(F.col("value") != ""))
 
 
@@ -66,39 +72,34 @@ def match_two_kbs(kb1: DataFrame, kb2: DataFrame,
                   cfg: MatchConfig = MatchConfig()) -> DataFrame:
     """(id1, id2, weight, via) matched pairs; ``via`` is 'unique' or
     'name'. One-to-one on both sides; unique-id links take precedence."""
-    # unique-id links (weight sentinel far above any name-hit count)
-    uniq = None
-    for col in cfg.unique_fields:
-        u1 = _values(kb1, col, cfg, "id1")
-        u2 = _values(kb2, col, cfg, "id2")
-        pairs = u1.join(u2, "value").select("id1", "id2").distinct()
-        uniq = pairs if uniq is None else uniq.unionByName(pairs).distinct()
-    uniq = (uniq.withColumn("weight", F.lit(1_000_000))
-            .withColumn("via", F.lit("unique")))
-
-    # name-relation candidate weights: +1 per shared (relation, value)
-    cands = None
-    for f1, f2 in cfg.name_relations:
-        v1 = _values(kb1, f1, cfg, "id1")
-        v2 = _values(kb2, f2, cfg, "id2")
-        hit = v1.join(v2, "value").select("id1", "id2")
-        cands = hit if cands is None else cands.unionByName(hit)
-    named = (cands.groupBy("id1", "id2")
-             .agg(F.count(F.lit(1)).alias("weight"))
-             .filter(F.col("weight") >= cfg.threshold)
-             .withColumn("via", F.lit("name")))
-
-    allc = uniq.unionByName(named)
+    uniq = list(cfg.unique_fields)
+    rels = Counter(cfg.name_relations)
+    fields1 = list(dict.fromkeys(uniq + [f1 for f1, _ in rels]))
+    fields2 = list(dict.fromkeys(uniq + [f2 for _, f2 in rels]))
+    hits = _index(kb1, fields1, cfg, "1").join(_index(kb2, fields2, cfg, "2"),
+                                               "value")
+    # each hit tagged with its (f1, f2) relation: +1 per configured name
+    # relation, a unique link when both sides hit the same unique field
+    name_hit = F.lit(0)
+    for (f1, f2), n in rels.items():
+        name_hit = F.when((F.col("f1") == f1) & (F.col("f2") == f2),
+                          n).otherwise(name_hit)
+    unique = F.col("unique")
+    pairs = (hits.groupBy("id1", "id2")
+             .agg(F.max((F.col("f1") == F.col("f2")) & F.col("f1").isin(uniq))
+                  .alias("unique"), F.sum(name_hit).alias("hits"))
+             .filter(unique | (F.col("hits") >= max(cfg.threshold, 1)))
+             # a unique link's weight is a sentinel above any hit count
+             .select("id1", "id2", F.when(unique, 1_000_000)
+                     .otherwise(F.col("hits")).cast("long").alias("weight"),
+                     F.when(unique, "unique").otherwise("name").alias("via")))
     # per-kb1 best candidate, then per-kb2 best of those picks (mutual
     # best = deterministic one-to-one)
-    w1 = Window.partitionBy("id1").orderBy(F.desc("weight"), F.asc("id2"),
-                                           F.asc("via"))
-    picked = (allc.withColumn("_r", F.row_number().over(w1))
-              .filter(F.col("_r") == 1).drop("_r"))
-    w2 = Window.partitionBy("id2").orderBy(F.desc("weight"), F.asc("id1"),
-                                           F.asc("via"))
-    return (picked.withColumn("_r", F.row_number().over(w2))
-            .filter(F.col("_r") == 1).drop("_r"))
+    for own, other in (("id1", "id2"), ("id2", "id1")):
+        w = Window.partitionBy(own).orderBy(F.desc("weight"), F.asc(other))
+        pairs = (pairs.withColumn("_r", F.row_number().over(w))
+                 .filter(F.col("_r") == 1).drop("_r"))
+    return pairs
 
 
 def merge_two_kbs(kb1: DataFrame, kb2: DataFrame,

@@ -207,14 +207,15 @@ def build_namelist(kb_scored: DataFrame,
 
     # G11 pronouns + P7 nationality forms → fragment, senseless rows. From
     # pandas, so they plan as a LocalTableScan: a list of tuples would be a
-    # Python-fed RDD scan with its own Python tasks.
+    # Python-fed RDD scan with its own Python tasks. One partition: split
+    # over defaultParallelism, each slice would be a task of its own.
     spark = kb_scored.sparkSession
     extra = spark.createDataFrame(pd.DataFrame(
         [(p, None, "pronoun", True, None) for p in
          sorted({w for p in PRONOUNS for w in (p, p[:1].upper() + p[1:])})]
         + [(n, None, "nationality", True, None)
            for n in sorted(nationality_forms())],
-        columns=_SURFACE_SCHEMA.names), _SURFACE_DDL)
+        columns=_SURFACE_SCHEMA.names), _SURFACE_DDL).coalesce(1)
     all_rows = generated.unionByName(extra)
 
     # P6 stoplist: demote to fragment-only (uniq_namelist.py:33-39)

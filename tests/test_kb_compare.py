@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from kglinker.graph.kb_compare import MatchConfig, match_two_kbs, merge_two_kbs
+from kglinker.queries import q_kb_compare_two
 
 SCHEMA = ("kb_id long, name string, aliases string, wiki_url string, "
           "country string")
@@ -68,3 +69,36 @@ def test_threshold_blocks_weak_matches(spark):
     cfg = MatchConfig(threshold=2)
     assert match_two_kbs(kb1, kb2, cfg).count() == 0
     assert match_two_kbs(kb1, kb2, MatchConfig(threshold=1)).count() == 1
+
+
+def test_repeated_alias_counts_per_occurrence(spark):
+    # every occurrence of a value is a hit: 'A' twice in kb1's aliases
+    # meets kb2's name (2) and aliases (2), kb1's name meets kb2's
+    # aliases (1), and 'B' meets 'B' once
+    kb1 = _kb(spark, [(1, "A", "A|A|B", "", "")])
+    got = match_two_kbs(kb1, _kb(spark, [(10, "A", "", "", "")])).collect()
+    assert [(r["id1"], r["id2"], r["weight"]) for r in got] == [(1, 10, 3)]
+    got = match_two_kbs(kb1, _kb(spark, [(10, "C", "A|B", "", "")])).collect()
+    assert [(r["id1"], r["id2"], r["weight"]) for r in got] == [(1, 10, 4)]
+
+
+def test_value_in_name_and_aliases_hits_both_relations(spark):
+    kb1 = _kb(spark, [(1, "X", "X", "", "")])
+    got = match_two_kbs(kb1, _kb(spark, [(10, "X", "", "", "")])).collect()
+    assert [(r["weight"], r["via"]) for r in got] == [(2, "name")]
+    got = match_two_kbs(kb1, _kb(spark, [(10, "X", "X", "", "")])).collect()
+    assert [(r["weight"], r["via"]) for r in got] == [(4, "name")]
+
+
+def test_match_two_kbs_job_count(spark):
+    """One value index per KB, one kb1×kb2 join and one groupBy: 8 Spark
+    jobs on the kb_compare_two gate inputs."""
+    df = q_kb_compare_two(spark, "")
+    sc = spark.sparkContext
+    sc.setJobGroup("match-two-kbs-jobs", "match_two_kbs on the gate inputs")
+    try:
+        assert len(df.collect()) == 28
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("match-two-kbs-jobs")
+    assert len(jobs) <= 8, f"{len(jobs)} jobs for match_two_kbs"

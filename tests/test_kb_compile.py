@@ -1,8 +1,8 @@
 """KB-snapshot compile: the plan shape and job count of scoring, the
 namelist and subname builds and the canonical map, and their parity with
 the plain-Python oracles on a KB larger than the 29-row fixture and on
-names that need P3/P4 normalization, and the G10 bare-surname
-thresholds."""
+names that need P3/P4 normalization, the K1 match keys, and the G10
+bare-surname thresholds."""
 
 from __future__ import annotations
 
@@ -10,12 +10,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from kglinker.data.kb_fixture import KB_COLUMNS, KB_ROWS, KB_SCHEMA, kb_df
-from kglinker.graph.canonicalize import canonical_map
+from kglinker.graph.canonicalize import (_surface_key, alias_match_edges,
+                                         canonical_map)
 from kglinker.jobs.kb_scale_probe import _rows as synthetic_kb_rows
+from kglinker.kb.expand import strip_name_tags
 from kglinker.kb.names import build_namelist, build_subname_map
 from kglinker.kb.scoring import score_kb
 from kglinker.oracle import oracle_canonical_map
-from kglinker.oracle_kb import oracle_namelist, oracle_subnames
+from kglinker.oracle_kb import (oracle_alias_edges, oracle_namelist,
+                                oracle_subnames)
 
 N_SYNTHETIC = 300
 ID_OFFSET = 1_000_000
@@ -69,6 +72,22 @@ def test_namelist_no_join_no_python_fed_scan(kb_scored):
     assert "LocalTableScan" in plan, plan
 
 
+def test_namelist_constant_rows_one_task(spark, kb_scored):
+    """The 258 G11/P7 rows are one partition: the namelist's surface stage
+    runs one task per scored-KB partition plus one, not one per core for
+    the constant rows."""
+    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
+    sc.setJobGroup("namelist-tasks", "namelist on the fixture")
+    try:
+        build_namelist(kb_scored).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    tasks = [st.getStageInfo(s).numTasks
+             for j in st.getJobIdsForGroup("namelist-tasks")
+             for s in st.getJobInfo(j).stageIds]
+    assert max(tasks) == kb_scored.rdd.getNumPartitions() + 1, tasks
+
+
 def test_score_kb_no_window(spark):
     """The per-type maxima are a broadcast aggregate, not a window that
     hash-partitions every KB row by type."""
@@ -97,9 +116,10 @@ def test_kb_names_job_count(spark, kb_scored):
 
 
 def test_canonical_map_job_count(spark, kb_scored):
-    """Star CC converges in O(log n) rounds of one checkpoint each, the
-    fixpoint signature observed by the same job: 14 Spark jobs for
-    canonical_map on the fixture."""
+    """One K1 index self-join gives every candidate pair, and star CC
+    converges in O(log n) rounds of one checkpoint each, the fixpoint
+    signature observed by the same job: 10 Spark jobs for canonical_map
+    on the fixture."""
     sc = spark.sparkContext
     sc.setJobGroup("canonical-map-jobs", "canonical_map on the fixture")
     try:
@@ -107,7 +127,7 @@ def test_canonical_map_job_count(spark, kb_scored):
     finally:
         sc.setJobGroup(None, None)
     jobs = sc.statusTracker().getJobIdsForGroup("canonical-map-jobs")
-    assert len(jobs) <= 16, f"{len(jobs)} jobs for canonical_map"
+    assert len(jobs) <= 10, f"{len(jobs)} jobs for canonical_map"
 
 
 @pytest.fixture(scope="module")
@@ -203,3 +223,73 @@ def test_g10_surname_thresholds(spark):
     assert got["Zvonek"] == [1]
     assert got["Vrba"] == []
     assert got["Hromada"] == [3]
+
+
+def _person(kb_id: int, name: str, aliases: str, **attrs) -> tuple:
+    """A url-less Czech person row; ``attrs`` override any column."""
+    row = dict.fromkeys(KB_COLUMNS, "") | {
+        "kb_id": kb_id, "type": "person", "name": name, "aliases": aliases,
+        "country": "CZ", "wiki_backlinks": 1, "wiki_hits": 1, "wiki_ps": 1}
+    return tuple((row | attrs)[c] for c in KB_COLUMNS)
+
+
+def test_canonical_map_merges_every_match_edge(spark):
+    """CC runs over every pair that reaches the threshold, not only each
+    row's best candidate: row 1 shares `Jan Novák` with row 2 and `Honza
+    Novák` with row 3 at equal scores, so the three are one entity."""
+    rows = [_person(1, "Jan Novák", "Honza Novák"),
+            _person(2, "Jan Novák", ""), _person(3, "Honza Novák", "")]
+    got = {r["kb_id"]: r["canon_id"] for r in
+           canonical_map(spark.createDataFrame(rows, KB_SCHEMA)).collect()}
+    want = oracle_canonical_map([dict(zip(KB_COLUMNS, r)) for r in rows])
+    assert got == want == {1: 1, 2: 1, 3: 1}
+
+
+_WHITESPACE = [chr(c) for c in range(0x10000) if chr(c).isspace()]
+_RAW_SURFACES = (
+    [f"{c}Mistr{c}{c}Pavel#A{c}Hus#AE{c}" for c in _WHITESPACE]
+    + ["Bjork\u200b", "\u200bMistr\u200c Pavel\u200d#A\ufeff",
+       "Mistr Pavel#A", "Mistr Pavel#AE", "Mistr #1 Pavel", "Pavel#AB",
+       "Pavel#AEE", "#A", "", "Praha#lang=cs", "Praha#lang=cs#ntype=nick",
+       "Praha #ntype=nick#A", "Praha#ntype=nick #lang=en"])
+
+
+@pytest.fixture(scope="module")
+def surface_keys(spark):
+    df = spark.createDataFrame([(s,) for s in _RAW_SURFACES], "raw string")
+    return {r["raw"]: r["key"] for r in
+            df.select("raw", _surface_key(F.col("raw")).alias("key")).collect()}
+
+
+@pytest.mark.parametrize("raw", _RAW_SURFACES, ids=ascii)
+def test_surface_key_is_strip_name_tags(surface_keys, raw):
+    """The engine's K1 surface key is exactly the P1/P4 base surface:
+    every Python whitespace character, zero-width characters, `#A`/`#AE`
+    word flags and `#lang=`/`#ntype=` tags."""
+    assert surface_keys[raw] == strip_name_tags(raw)
+
+
+def test_flagged_alias_shares_k1_key(spark):
+    """A P4 word flag is not part of a K1 key: two url-less persons with
+    equal type, country and birth date, aliased `Mistr Pavel#A` and
+    `Mistr Pavel`, are one K3 edge and one entity, for both oracles and
+    the engine."""
+    rows = list(KB_ROWS) + [
+        _person(3_000_000, "Pavel Kříž", "Mistr Pavel#A",
+                date_of_birth="1400-01-01"),
+        _person(3_000_001, "Pavel Kuneš", "Mistr Pavel",
+                date_of_birth="1400-01-01")]
+    kb = spark.createDataFrame(rows, KB_SCHEMA).cache()
+    dicts = [dict(zip(KB_COLUMNS, r)) for r in rows]
+    try:
+        edges = {(r["src"], r["dst"]) for r in alias_match_edges(kb).collect()}
+        canon = {r["kb_id"]: r["canon_id"]
+                 for r in canonical_map(kb).collect()}
+    finally:
+        kb.unpersist()
+    want_edges = {(r["src"], r["dst"]) for r in oracle_alias_edges(dicts)}
+    want_canon = oracle_canonical_map(dicts)
+    assert (3_000_000, 3_000_001) in want_edges
+    assert want_canon[3_000_001] == 3_000_000
+    assert edges == want_edges
+    assert canon == want_canon
