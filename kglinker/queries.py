@@ -460,12 +460,14 @@ def q_kb_compare_two(spark, sf_dir):
 def _sql_kb_compare_two() -> str:
     src = f"read_parquet('{_EXPECTED_DIR}/kb_fixture.parquet')"
     def vals(kb, col, out):
-        single = (f"SELECT kb_id AS {out}, {col} AS value FROM {kb} "
-                  f"WHERE coalesce({col}, '') != ''")
-        multi = (f"SELECT kb_id AS {out}, v AS value FROM (SELECT kb_id, "
-                 f"unnest(string_split(coalesce({col}, ''), '|')) AS v "
-                 f"FROM {kb}) WHERE v != ''")
-        return f"({single} UNION ALL {multi})" if col == "aliases" else f"({single})"
+        # K1 values: the name as is, the aliases split on '|' (a
+        # single-valued alias is one value, not two)
+        if col != "aliases":
+            return (f"(SELECT kb_id AS {out}, {col} AS value FROM {kb} "
+                    f"WHERE coalesce({col}, '') != '')")
+        return (f"(SELECT kb_id AS {out}, v AS value FROM (SELECT kb_id, "
+                f"unnest(string_split(coalesce({col}, ''), '|')) AS v "
+                f"FROM {kb}) WHERE v != '')")
     rels = [("name", "name"), ("name", "aliases"),
             ("aliases", "name"), ("aliases", "aliases")]
     hits = " UNION ALL ".join(

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from kglinker.graph.kb_compare import MatchConfig, match_two_kbs, merge_two_kbs
-from kglinker.queries import q_kb_compare_two
+from kglinker.queries import _EXPECTED_DIR, _sql_kb_compare_two, q_kb_compare_two
 
 SCHEMA = ("kb_id long, name string, aliases string, wiki_url string, "
           "country string")
@@ -88,6 +88,22 @@ def test_value_in_name_and_aliases_hits_both_relations(spark):
     assert [(r["weight"], r["via"]) for r in got] == [(2, "name")]
     got = match_two_kbs(kb1, _kb(spark, [(10, "X", "X", "", "")])).collect()
     assert [(r["weight"], r["via"]) for r in got] == [(4, "name")]
+
+
+def test_single_valued_shared_alias_counts_once_in_oracle(spark):
+    """The kb_compare_two oracle SQL on one source row (name `Alpha`,
+    alias and redirect `Shared`): kb1 and the derived kb2 share the name
+    and the alias, so oracle and engine both weigh the pair 2."""
+    import duckdb
+    con = duckdb.connect()
+    con.execute("CREATE TABLE src AS SELECT 1::BIGINT AS kb_id, 'Alpha' AS name, "
+                "'Shared' AS aliases, 'Shared' AS redirects, '' AS wiki_url")
+    sql = _sql_kb_compare_two().replace(
+        f"read_parquet('{_EXPECTED_DIR}/kb_fixture.parquet')", "src")
+    assert con.execute(sql).fetchall() == [(1, 101, 2, "name")]
+    got = match_two_kbs(_kb(spark, [(1, "Alpha", "Shared", "", "")]),
+                        _kb(spark, [(101, "Alpha", "Shared", "", "")])).collect()
+    assert [tuple(r) for r in got] == [(1, 101, 2, "name")]
 
 
 def test_match_two_kbs_job_count(spark):
