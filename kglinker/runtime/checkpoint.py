@@ -32,7 +32,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["bucket_col", "LineageCheckpointer"]
+__all__ = ["bucket_col", "write_json_atomic", "LineageCheckpointer"]
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write ``obj`` as JSON to ``path`` all or nothing: dump to a unique
+    temp file in the same directory, then one ``os.replace``."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
 
 
 def bucket_col(n_buckets: int) -> F.Column:
@@ -83,11 +92,9 @@ class LineageCheckpointer:
         return recs
 
     def _mark_done(self, bucket: int, metrics: dict) -> None:
-        rec = {"bucket": bucket, "kb_snapshot": self.kb_snapshot, **metrics}
-        tmp = os.path.join(self.lineage_path, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, os.path.join(self.lineage_path, f"bucket-{bucket}.json"))
+        write_json_atomic(
+            os.path.join(self.lineage_path, f"bucket-{bucket}.json"),
+            {"bucket": bucket, "kb_snapshot": self.kb_snapshot, **metrics})
 
     # -- execution ----------------------------------------------------------
     def run(self, transcripts: DataFrame,

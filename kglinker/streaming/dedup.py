@@ -19,11 +19,11 @@ Iceberg the append becomes ``MERGE INTO corpus USING batch ON text_hash
 WHEN NOT MATCHED THEN INSERT`` and the state IS the corpus table.
 
 Replay-skip markers are namespaced per stream (``docs`` here, ``sigs``
-for near-dup, ``edges`` for the graph merge — r4 advice), so multiple
-streams may share a ``state_path`` without batch N of one skipping
-batch N of another. Batch ids come from the CHECKPOINT: if you reset
-``checkpoint_path`` but keep ``state_path``, delete the stream's marker
-file too (the anti-join alone then keeps the replay correct here).
+for near-dup), so both streams may share a ``state_path`` without batch
+N of one skipping batch N of the other. Batch ids come from the
+CHECKPOINT: if you reset ``checkpoint_path`` but keep ``state_path``,
+delete the stream's marker file too (the anti-join alone then keeps the
+replay correct here). Each drain runs as one ``availableNow`` query.
 
 Scale: the anti-join is new-batch × seen-hashes keyed by text_hash — on
 a cluster, bucket the state by ``text_hash`` so each micro-batch probes
@@ -33,6 +33,7 @@ batch side is always the small side.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
-from kglinker.streaming.graph import _applied, _mark_applied
+from kglinker.runtime.checkpoint import write_json_atomic
 
 __all__ = ["stream_dedup_documents", "read_dedup_state",
            "stream_neardup_documents", "read_neardup_state", "DOCS_SCHEMA"]
@@ -48,6 +49,29 @@ __all__ = ["stream_dedup_documents", "read_dedup_state",
 DOCS_SCHEMA = ("doc_id long, text string, lang string, source string, "
                "n_chars int")
 _DOCS = "docs"
+_MARK = "_applied_batches_{stream}.json"
+
+
+def _applied(state_path: str, stream: str) -> set[int]:
+    p = os.path.join(state_path, _MARK.format(stream=stream))
+    if os.path.exists(p):
+        with open(p) as fh:
+            return set(json.load(fh))
+    return set()
+
+
+def _mark_applied(state_path: str, batch_id: int, stream: str) -> None:
+    write_json_atomic(os.path.join(state_path, _MARK.format(stream=stream)),
+                      sorted(_applied(state_path, stream) | {int(batch_id)}))
+
+
+def _drain(stream: DataFrame, sink, checkpoint_path: str) -> StreamingQuery:
+    """One availableNow query: every file present at start, then stop."""
+    return (stream.writeStream
+            .foreachBatch(sink)
+            .option("checkpointLocation", checkpoint_path)
+            .trigger(availableNow=True)
+            .start())
 
 
 def read_dedup_state(spark: SparkSession, state_path: str) -> DataFrame:
@@ -55,19 +79,12 @@ def read_dedup_state(spark: SparkSession, state_path: str) -> DataFrame:
 
 
 def stream_dedup_documents(spark: SparkSession, input_path: str,
-                           state_path: str, checkpoint_path: str,
-                           available_now: bool = True,
-                           max_files_per_trigger: int | None = None
+                           state_path: str, checkpoint_path: str
                            ) -> StreamingQuery:
     """readStream documents → per-batch within-batch survivors →
-    anti-join against the seen-state → append only first-seen content.
-    ``max_files_per_trigger`` bounds micro-batch size (availableNow then
-    drains the backlog in several batches instead of one)."""
+    anti-join against the seen-state → append only first-seen content."""
     os.makedirs(state_path, exist_ok=True)
-    reader = spark.readStream.schema(DOCS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
+    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_path)
 
     def sink(batch_df, batch_id: int) -> None:
         if int(batch_id) in _applied(state_path, "docs"):
@@ -86,21 +103,14 @@ def stream_dedup_documents(spark: SparkSession, input_path: str,
         new.write.mode("append").parquet(target)
         _mark_applied(state_path, batch_id, "docs")
 
-    writer = (stream.writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, sink, checkpoint_path)
 
 
 def stream_neardup_documents(spark: SparkSession, input_path: str,
                              state_path: str, checkpoint_path: str,
                              num_hashes: int = 64, bands: int = 16,
                              min_est: float = 0.5,
-                             keep_dead_signatures: bool = False,
-                             available_now: bool = True,
-                             max_files_per_trigger: int | None = None
+                             keep_dead_signatures: bool = False
                              ) -> StreamingQuery:
     """Streaming NEAR-dup admission: per micro-batch, minhash-sign the
     arriving documents and drop any doc whose estimated Jaccard vs an
@@ -141,10 +151,7 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
     ZERO exchange on the state side); signatures are ``bands`` short
     strings per doc — the state stays a tiny fraction of corpus bytes."""
     os.makedirs(state_path, exist_ok=True)
-    reader = spark.readStream.schema(DOCS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_path)
+    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_path)
     sig_dir = os.path.join(state_path, "sigs")
     hcols = [f"h{i}" for i in range(num_hashes)]
 
@@ -237,22 +244,11 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
         bk.unpersist()
         _mark_applied(state_path, batch_id, "sigs")
 
-    writer = (stream.writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(stream, sink, checkpoint_path)
 
 
 def read_neardup_state(spark: SparkSession, state_path: str) -> DataFrame:
     """Admitted doc ids (one row per doc) from the signature state —
-    dead rows (closure mode) are not admissions. Pre-r5 states lack the
-    ``dead`` column (every row was an admission): coalesce treats the
-    missing/null column as live, so legacy and mixed-schema states read
-    correctly (mergeSchema resolves the union of footers)."""
-    st = (spark.read.option("mergeSchema", "true")
-          .parquet(os.path.join(state_path, "sigs")))
-    if "dead" in st.columns:
-        st = st.filter(~F.coalesce(F.col("dead"), F.lit(False)))
-    return st.select("doc_id").distinct()
+    dead rows (closure mode) are not admissions."""
+    return (spark.read.parquet(os.path.join(state_path, "sigs"))
+            .filter(~F.col("dead")).select("doc_id").distinct())

@@ -1,5 +1,6 @@
 """Docs-vs-code drift guards: every gate named in COVERAGE.md exists in
-the registry, and every registry query is documented somewhere."""
+the registry, every registry query is documented somewhere, and every
+module path README.md and COVERAGE.md name exists."""
 
 from __future__ import annotations
 
@@ -51,3 +52,43 @@ def test_registry_capped_at_50_flagship_first():
                          "multimodal_metadata", "multimodal_decode"]
     # every entry must still carry an exact oracle
     assert all(q.sql is not None for q in QUERIES.values())
+
+
+def _backticked_paths(text: str) -> list[str]:
+    """``x/y.py`` paths at the start of backticked spans (a ``::name``
+    suffix is dropped; bare reference-file names have no slash)."""
+    return [m for span in re.findall(r"`([^`\n]+)`", text)
+            for m in re.findall(r"^(\w+(?:/\w+)*/\w+\.py)\b", span)]
+
+
+def _readme_tree_paths(text: str) -> list[str]:
+    """Module paths of README's repo-layout tree: a line at indent 0 or 2
+    opens its directory (``kglinker/`` and its two-space-indented
+    children) or names a file of the enclosing one; deeper lines continue
+    the last directory."""
+    block = text.split("## Repo layout", 1)[1].split("```", 2)[1]
+    paths, cur = [], ""
+    for line in block.splitlines():
+        words = line.split()
+        indent = len(line) - len(line.lstrip())
+        if words and indent <= 2:
+            base = "kglinker/" if indent == 2 else ""
+            cur = base + words[0] if words[0].endswith("/") else base
+        paths += [cur + f for f in re.findall(r"\b\w+\.py\b", line)]
+    return paths
+
+
+def test_documented_module_paths_exist():
+    """A module deleted or moved must not leave README.md or COVERAGE.md
+    pointing at it. Backticked paths are relative to the repo root or
+    to ``kglinker/``."""
+    readme = open(os.path.join(_REPO, "README.md"), encoding="utf-8").read()
+    coverage = open(os.path.join(_REPO, "COVERAGE.md"), encoding="utf-8").read()
+    tree = _readme_tree_paths(readme)
+    assert "kglinker/streaming/graph.py" in tree and "bench.py" in tree
+    missing = [p for p in tree if not os.path.isfile(os.path.join(_REPO, p))]
+    named = _backticked_paths(readme) + _backticked_paths(coverage)
+    missing += [p for p in named
+                if not any(os.path.isfile(os.path.join(_REPO, d, p))
+                           for d in ("", "kglinker"))]
+    assert not missing, f"docs name module paths that do not exist: {missing}"

@@ -1,35 +1,10 @@
-"""Streaming ingestion (SURVEY §2.9), KB enrichment/validation (S7/S8),
-and the salted-aggregation skew path."""
+"""KB enrichment/validation (S7/S8) and the salted-aggregation skew
+path."""
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-
-from kglinker.data.transcripts import transcripts_df
-
-
-def test_stream_extract(spark, artifacts_bcast, tmp_path):
-    from kglinker.streaming.ingest import stream_extract_mentions
-    inp = str(tmp_path / "incoming")
-    out = str(tmp_path / "mentions")
-    ckpt = str(tmp_path / "ckpt")
-    transcripts_df(spark, 20).write.mode("overwrite").parquet(inp)
-    q = stream_extract_mentions(spark, inp, out, ckpt, artifacts_bcast)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    assert got.count() > 0
-    # exactly-once: draining again with the same checkpoint adds nothing
-    n1 = got.count()
-    q2 = stream_extract_mentions(spark, inp, out, ckpt, artifacts_bcast)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == n1
-    # batch parity: streaming output equals the batch stage on same input
-    from kglinker.extract.stage import extract_mentions
-    batch = extract_mentions(spark.read.parquet(inp), artifacts_bcast)
-    s1 = {tuple(r) for r in spark.read.parquet(out).collect()}
-    s2 = {tuple(r) for r in batch.collect()}
-    assert s1 == s2
 
 
 def test_wiki_stats_join(spark, kb_scored):

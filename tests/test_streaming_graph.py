@@ -1,14 +1,19 @@
-"""Streaming KG maintenance: edge weights accumulate across micro-batches,
-idempotently, and converge to the batch-mode result."""
+"""Streaming KG maintenance: edge weights accumulate across micro-batches
+from whole conversations, each merge commits with one rename, and a
+crash at any commit step followed by a replay gives the weights of an
+uninterrupted run."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import time
 from datetime import datetime
 
-from pyspark.sql import functions as F
+import pytest
 
 from kglinker.data.transcripts import TRANSCRIPTS_SCHEMA
+from kglinker.streaming import graph
 from kglinker.streaming.graph import (merge_edge_deltas, read_edge_state,
                                       stream_cooccurrence_edges)
 
@@ -22,13 +27,45 @@ def _write_batch(spark, path, rows, name):
     """Land new parquet FILES in the watched directory (the file stream
     source does not recurse into subdirectories)."""
     import glob
-    import shutil
     tmp = os.path.join(path, f"_stage_{name}")
     df = spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA)
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     for i, f in enumerate(sorted(glob.glob(os.path.join(tmp, "part-*.parquet")))):
         shutil.move(f, os.path.join(path, f"{name}_{i}.parquet"))
     shutil.rmtree(tmp)
+
+
+def _edges(spark, state):
+    return {(r["subj"], r["obj"]): r["weight"]
+            for r in read_edge_state(spark, state).collect()}
+
+
+def _await_read(q, n_rows, timeout=120):
+    """Block until the query's finished micro-batches have read
+    ``n_rows`` source rows in all. (``processAllAvailable`` never returns
+    here: the processing-time timeout asks for a micro-batch on every
+    trigger.)"""
+    deadline = time.time() + timeout
+    while sum(p["numInputRows"] for p in q.recentProgress) < n_rows:
+        assert time.time() < deadline, "the query did not read its input"
+        time.sleep(0.2)
+
+
+def _await_edges(spark, q, state, want, timeout=120):
+    """Poll the live edge table until it equals ``want`` (or time runs
+    out), stop the query, and return the table as it then stands."""
+    deadline = time.time() + timeout
+    try:
+        while time.time() < deadline:
+            try:
+                if _edges(spark, state) == want:
+                    break
+            except Exception:   # a version removed under the read
+                pass
+            time.sleep(1)
+    finally:
+        q.stop()
+    return _edges(spark, state)
 
 
 def test_stream_edges_accumulate(spark, artifacts_bcast, tmp_path):
@@ -40,22 +77,43 @@ def test_stream_edges_accumulate(spark, artifacts_bcast, tmp_path):
     # batch 1: one conversation mentioning Curie(8) + Prague-canonical(12)
     _write_batch(spark, inp, _conv("s1", ["Marie Curie visited Praha ."], 0),
                  "b1")
-    q = stream_cooccurrence_edges(spark, inp, state, ckpt, artifacts_bcast)
-    q.awaitTermination()
-    e1 = {(r["subj"], r["obj"]): r["weight"]
-          for r in read_edge_state(spark, state).collect()}
-    assert e1 == {("8", "12"): 1}   # sorted entity pair, one conversation
+    q = stream_cooccurrence_edges(spark, inp, state, ckpt, artifacts_bcast,
+                                  idle_timeout_ms=1000)
+    # sorted entity pair, one conversation
+    assert _await_edges(spark, q, state, {("8", "12"): 1}) == {("8", "12"): 1}
 
-    # batch 2: two more conversations carrying the same edge
+    # batch 2, after a restart on the same checkpoint: two more
+    # conversations carrying the same edge
     _write_batch(spark, inp,
                  _conv("s2", ["Marie Curie visited Praha again ."], 1)
                  + _conv("s3", ["Marie Curie loved Praha ."], 2), "b2")
-    q2 = stream_cooccurrence_edges(spark, inp, state, ckpt, artifacts_bcast)
-    q2.awaitTermination()
-    e2 = {(r["subj"], r["obj"]): r["weight"]
-          for r in read_edge_state(spark, state).collect()}
-    key = ("8", "12") if ("8", "12") in e2 else ("12", "8")
-    assert e2[key] == 3
+    q2 = stream_cooccurrence_edges(spark, inp, state, ckpt, artifacts_bcast,
+                                   idle_timeout_ms=1000)
+    assert _await_edges(spark, q2, state, {("8", "12"): 3}) == {("8", "12"): 3}
+    # each commit leaves one version and no staging directory
+    assert len(os.listdir(os.path.join(state, "edges"))) == 1
+
+
+def test_stream_edges_close_split_conversation(spark, artifacts_bcast,
+                                               tmp_path):
+    """Conversation c1 arrives over two files: turn 0, then turn 0 again
+    (a re-send) with turn 1, whose pronoun ``ona`` refers back to Marie
+    Curie. The edges come from the whole conversation: Curie (8), Praha
+    (12) and Germany (17) pair once each. Annotating each micro-batch on
+    its own gives only (8, 12)."""
+    inp, state, ckpt = (str(tmp_path / d) for d in ("in", "st", "ck"))
+    os.makedirs(inp)
+    ts = datetime(2025, 1, 1)
+    turn0 = ("c1", 0, "user", "Marie Curie visited Praha .", None, ts)
+    turn1 = ("c1", 1, "assistant", "later ona moved to Germany .", None, ts)
+    _write_batch(spark, inp, [turn0], "b1")
+    # the idle timeout must outlast the gap between the two batches
+    q = stream_cooccurrence_edges(spark, inp, state, ckpt, artifacts_bcast,
+                                  idle_timeout_ms=10000)
+    _await_read(q, 1)            # turn 0 sits in the group state
+    _write_batch(spark, inp, [turn0, turn1], "b2")   # a later micro-batch
+    want = {("8", "12"): 1, ("8", "17"): 1, ("12", "17"): 1}
+    assert _await_edges(spark, q, state, want) == want
 
 
 def test_merge_is_idempotent_per_batch(spark, tmp_path):
@@ -63,54 +121,64 @@ def test_merge_is_idempotent_per_batch(spark, tmp_path):
     os.makedirs(state)
     delta = spark.createDataFrame([("1", "2", 5)],
                                   "subj string, obj string, weight long")
-    merge_edge_deltas(spark, delta, state)
-    merge_edge_deltas(spark, delta, state)   # raw re-merge DOES add
-    got = read_edge_state(spark, state).collect()[0]["weight"]
-    assert got == 10
-    # ...which is why the sink guards on batch_id (exercised above via the
-    # checkpoint: re-running the stream with no new files merges nothing)
+    merge_edge_deltas(spark, delta, state, 0)
+    merge_edge_deltas(spark, delta, state, 1)   # a new batch adds
+    assert _edges(spark, state) == {("1", "2"): 10}
+    merge_edge_deltas(spark, delta, state, 1)   # its replay does not
+    merge_edge_deltas(spark, delta, state, 0)
+    assert _edges(spark, state) == {("1", "2"): 10}
+    assert os.listdir(os.path.join(state, "edges")) == ["v-1"]
 
 
-def test_legacy_marker_lifecycle(spark, tmp_path):
-    """r5 ADVICE + r6 review: the pre-namespacing `_applied_batches.json`
-    was written by ALL streams. It must be imported into the edges
-    stream's namespaced marker exactly ONCE at stream start, and only
-    when the state_path already holds an edge table (a genuine
-    pre-namespacing edge-stream state); a dedup-only state_path must
-    never have its foreign marker honored — even after the edge stream's
-    own first batch creates the edge table (the r6 review's flip
-    scenario)."""
-    import json as _json
+class _Crash(Exception):
+    pass
 
-    from kglinker.streaming.graph import (_applied, _mark_applied,
-                                          _migrate_legacy_marker)
 
-    # dedup-contaminated path: legacy marker, NO edge table
+_REAL_RENAME = os.rename
+
+
+def _crash_before_rename(src, dst):
+    raise _Crash
+
+
+def _crash_after_rename(src, dst):
+    _REAL_RENAME(src, dst)
+    raise _Crash
+
+
+def _crash_in_cleanup(path, *args, **kwargs):
+    # the old version is half deleted when the process dies
+    os.remove(os.path.join(path, sorted(os.listdir(path))[0]))
+    raise _Crash
+
+
+@pytest.mark.parametrize("target, crash", [
+    ("rename", _crash_before_rename),
+    ("rename", _crash_after_rename),
+    ("rmtree", _crash_in_cleanup),
+])
+def test_merge_commit_survives_crash_and_replay(spark, tmp_path, monkeypatch,
+                                                target, crash):
+    """A crash at each step of batch 1's commit, then a restart that
+    replays batch 1 and goes on with batch 2: the weights equal an
+    uninterrupted run, and one committed version is left."""
+    def delta(rows):
+        return spark.createDataFrame(rows,
+                                     "subj string, obj string, weight long")
+    deltas = [[("1", "2", 1)], [("1", "2", 2), ("2", "3", 1)], [("3", "4", 5)]]
+    want = {("1", "2"): 3, ("2", "3"): 1, ("3", "4"): 5}
+
     state = str(tmp_path / "st")
-    os.makedirs(state)
-    with open(os.path.join(state, "_applied_batches.json"), "w") as fh:
-        _json.dump([0, 1, 2], fh)
-    _migrate_legacy_marker(state)          # stream start: nothing to do
-    assert _applied(state) == set()
-    _mark_applied(state, 0)                # batch 0 merges, edge table born
-    os.makedirs(os.path.join(state, "edges"))
-    # later batches: foreign legacy ids must STAY ignored (the namespaced
-    # marker exists; no re-absorption)
-    assert _applied(state) == {0}
-    _mark_applied(state, 1)
-    assert _applied(state) == {0, 1}
-
-    # genuine pre-namespacing edge state: edge table + legacy marker,
-    # no namespaced marker -> one-shot import at stream start
-    state2 = str(tmp_path / "st2")
-    os.makedirs(os.path.join(state2, "edges"))
-    with open(os.path.join(state2, "_applied_batches.json"), "w") as fh:
-        _json.dump([0, 1, 2], fh)
-    _migrate_legacy_marker(state2)
-    assert _applied(state2) == {0, 1, 2}
-    # import is one-shot: a dedup stream appending to the legacy file
-    # later never leaks into the edges marker
-    with open(os.path.join(state2, "_applied_batches.json"), "w") as fh:
-        _json.dump([0, 1, 2, 7], fh)
-    _migrate_legacy_marker(state2)
-    assert _applied(state2) == {0, 1, 2}
+    merge_edge_deltas(spark, delta(deltas[0]), state, 0)
+    with monkeypatch.context() as m:
+        m.setattr(os if target == "rename" else shutil, target, crash)
+        with pytest.raises(_Crash):
+            merge_edge_deltas(spark, delta(deltas[1]), state, 1)
+    # a reader sees batch 0's table or batches 0+1's, never no table
+    assert _edges(spark, state) in ({("1", "2"): 1},
+                                    {("1", "2"): 3, ("2", "3"): 1})
+    edges = graph._open_edges(state)      # the restarted stream
+    for batch_id in (1, 2):               # batch 1 replays
+        merge_edge_deltas(spark, delta(deltas[batch_id]), state, batch_id)
+    assert _edges(spark, state) == want
+    assert os.listdir(edges) == ["v-2"]
