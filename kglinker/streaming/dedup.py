@@ -65,10 +65,19 @@ def _mark_applied(state_path: str, batch_id: int, stream: str) -> None:
                       sorted(_applied(state_path, stream) | {int(batch_id)}))
 
 
-def _drain(stream: DataFrame, sink, checkpoint_path: str) -> StreamingQuery:
-    """One availableNow query: every file present at start, then stop."""
+def _drain(stream: DataFrame, sink, state_path: str, name: str,
+           checkpoint_path: str) -> StreamingQuery:
+    """One availableNow query: every file present at start, then stop.
+    ``sink(batch_df)`` runs once per batch id: ids in the ``name``
+    stream's marker are skipped, and each applied id is marked."""
+    def guarded(batch_df, batch_id: int) -> None:
+        if int(batch_id) in _applied(state_path, name):
+            return
+        sink(batch_df)
+        _mark_applied(state_path, batch_id, name)
+
     return (stream.writeStream
-            .foreachBatch(sink)
+            .foreachBatch(guarded)
             .option("checkpointLocation", checkpoint_path)
             .trigger(availableNow=True)
             .start())
@@ -86,9 +95,7 @@ def stream_dedup_documents(spark: SparkSession, input_path: str,
     os.makedirs(state_path, exist_ok=True)
     stream = spark.readStream.schema(DOCS_SCHEMA).parquet(input_path)
 
-    def sink(batch_df, batch_id: int) -> None:
-        if int(batch_id) in _applied(state_path, "docs"):
-            return
+    def sink(batch_df) -> None:
         sp = batch_df.sparkSession
         hashed = batch_df.withColumn("text_hash", F.md5("text"))
         w = Window.partitionBy("text_hash").orderBy("doc_id")
@@ -101,9 +108,8 @@ def stream_dedup_documents(spark: SparkSession, input_path: str,
         else:
             new = survivors
         new.write.mode("append").parquet(target)
-        _mark_applied(state_path, batch_id, "docs")
 
-    return _drain(stream, sink, checkpoint_path)
+    return _drain(stream, sink, state_path, _DOCS, checkpoint_path)
 
 
 def stream_neardup_documents(spark: SparkSession, input_path: str,
@@ -171,9 +177,7 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
         # them packed as one array
         return F.array(*[F.col(f"{side}.{h}") for h in hcols]).alias(name)
 
-    def sink(batch_df, batch_id: int) -> None:
-        if int(batch_id) in _applied(state_path, "sigs"):
-            return
+    def sink(batch_df) -> None:
         sp = batch_df.sparkSession
         from kglinker.ops.dedup import minhash_est, minhash_signatures
         sig = minhash_signatures(batch_df, num_hashes)
@@ -242,9 +246,8 @@ def stream_neardup_documents(spark: SparkSession, input_path: str,
             survivors = survivors.unionByName(killed)
         survivors.write.mode("append").parquet(sig_dir)
         bk.unpersist()
-        _mark_applied(state_path, batch_id, "sigs")
 
-    return _drain(stream, sink, checkpoint_path)
+    return _drain(stream, sink, state_path, "sigs", checkpoint_path)
 
 
 def read_neardup_state(spark: SparkSession, state_path: str) -> DataFrame:

@@ -53,8 +53,11 @@ def _await_read(q, n_rows, timeout=120):
 
 def _await_edges(spark, q, state, want, timeout=120):
     """Poll the live edge table until it equals ``want`` (or time runs
-    out), stop the query, and return the table as it then stands."""
+    out), check that the micro-batch after the commit (an empty one: the
+    timeout asks for one per trigger) commits no new version, stop the
+    query, and return the table as it then stands."""
     deadline = time.time() + timeout
+    edges = os.path.join(state, "edges")
     try:
         while time.time() < deadline:
             try:
@@ -63,6 +66,11 @@ def _await_edges(spark, q, state, want, timeout=120):
             except Exception:   # a version removed under the read
                 pass
             time.sleep(1)
+        live = graph._committed(edges)
+        while ((q.lastProgress or {}).get("batchId", -1) <= live
+               and time.time() < deadline):
+            time.sleep(0.2)
+        assert graph._committed(edges) == live
     finally:
         q.stop()
     return _edges(spark, state)
