@@ -11,10 +11,8 @@ decode, Arrow batch shape — is real and tested. Decode kernels:
   verification, zlib inflate, and full scanline filter reconstruction
   (None/Sub/Up/Average/Paeth) for 8-bit gray/RGB/RGBA non-interlaced —
   the raster format a real training corpus actually contains.
-- JPEG/audio/video need PIL/ffmpeg (absent in this container):
-  ``decode_media`` raises ``NotImplementedError`` for those formats
-  (default) or produces a deterministic fake (md5-derived dimensions)
-  with ``fake=True`` so downstream plumbing can be exercised.
+- JPEG/audio/video need PIL/ffmpeg, which the package does not depend
+  on: ``decode_media`` raises ``NotImplementedError`` for those formats.
 
 At 100 TB: binary payloads dominate row size → keep them in their own
 column family (parquet: large row groups, no dictionary), never shuffle
@@ -34,9 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["attach_blob", "media_metadata", "decode_media", "frame_sample",
-           "synth_ppm", "synth_png", "synth_media",
-           "resize_features"]
+__all__ = ["attach_blob", "media_metadata", "decode_media",
+           "synth_ppm", "synth_png", "synth_media"]
 
 DECODED_SCHEMA = ("doc_id long, mime string, n_bytes int, width int, "
                   "height int, channels int, px_sum long, feature_hash string")
@@ -240,90 +237,35 @@ def media_metadata(docs_with_blob: DataFrame) -> DataFrame:
         F.octet_length("blob").cast("int").alias("n_bytes"))
 
 
-def decode_media(docs_with_blob: DataFrame, fake: bool = False) -> DataFrame:
+def decode_media(docs_with_blob: DataFrame) -> DataFrame:
     """Arrow-batched decode / feature-extract over ``mapInPandas``.
 
-    ``fake=False`` decodes P6 PPM and PNG (8-bit gray/RGB/RGBA,
-    full filter reconstruction — pure stdlib) natively and raises
+    Decodes P6 PPM and PNG (8-bit gray/RGB/RGBA, full filter
+    reconstruction — pure stdlib) natively and raises
     ``NotImplementedError`` at task time for formats that need PIL/ffmpeg
-    (absent here). ``fake=True`` emits deterministic md5-derived
-    dimensions + a feature hash, exercising the real batch shape: one
-    pandas batch in → one feature frame out, blob column dropped on
-    output (features only cross the shuffle)."""
+    (not a dependency). One pandas batch in → one feature frame out, blob
+    column dropped on output (features only cross the shuffle)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["doc_id", "mime", "n_bytes", "width", "height", "channels",
                 "px_sum", "feature_hash"]
         for pdf in batches:
-            if not fake:
-                rows = []
-                for doc_id, mime, blob in zip(pdf["doc_id"], pdf["mime"],
-                                              pdf["blob"]):
-                    b = bytes(blob)
-                    if b.startswith(b"P6"):
-                        w, hgt, px = _decode_ppm(b)
-                        ch, out_mime = 3, "image/x-portable-pixmap"
-                    elif b.startswith(_PNG_SIG):
-                        w, hgt, ch, px = _decode_png(b)
-                        out_mime = "image/png"
-                    else:
-                        raise NotImplementedError(
-                            f"media decode for {mime!r} requires PIL/ffmpeg "
-                            "(absent in this container); PPM and PNG decode "
-                            "natively, or run with fake=True")
-                    rows.append((int(doc_id), out_mime, len(b), w, hgt, ch,
-                                 sum(px), hashlib.md5(px).hexdigest()))
-                yield pd.DataFrame(rows, columns=cols)
-                continue
-            h = [hashlib.md5(bytes(b)).hexdigest() for b in pdf["blob"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "mime": pdf["mime"],
-                "n_bytes": [len(bytes(b)) for b in pdf["blob"]],
-                "width": [1 + int(x[:4], 16) % 512 for x in h],
-                "height": [1 + int(x[4:8], 16) % 512 for x in h],
-                "channels": [3] * len(h),
-                "px_sum": [int(x[8:12], 16) for x in h],
-                "feature_hash": h,
-            })
+            rows = []
+            for doc_id, mime, blob in zip(pdf["doc_id"], pdf["mime"],
+                                          pdf["blob"]):
+                b = bytes(blob)
+                if b.startswith(b"P6"):
+                    w, hgt, px = _decode_ppm(b)
+                    ch, out_mime = 3, "image/x-portable-pixmap"
+                elif b.startswith(_PNG_SIG):
+                    w, hgt, ch, px = _decode_png(b)
+                    out_mime = "image/png"
+                else:
+                    raise NotImplementedError(
+                        f"media decode for {mime!r} requires PIL/ffmpeg; "
+                        "PPM and PNG decode natively")
+                rows.append((int(doc_id), out_mime, len(b), w, hgt, ch,
+                             sum(px), hashlib.md5(px).hexdigest()))
+            yield pd.DataFrame(rows, columns=cols)
 
     return docs_with_blob.mapInPandas(run, DECODED_SCHEMA)
-
-
-FRAME_SCHEMA = "doc_id long, frame_idx int, frame_hash string, offset_bytes int"
-
-
-def frame_sample(docs_with_blob: DataFrame, every_n_bytes: int = 64,
-                 fake: bool = True) -> DataFrame:
-    """Video-style frame sampling: one row per sampled frame (1→N fan-out
-    inside ``mapInPandas`` — the batch shape a real ffmpeg key-frame
-    sampler uses; the decode kernel itself is the deterministic fake)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                raise NotImplementedError("frame decode requires ffmpeg")
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
-                b = bytes(blob)
-                for k, off in enumerate(range(0, len(b), every_n_bytes)):
-                    chunk = b[off:off + every_n_bytes]
-                    rows.append((int(doc_id), k,
-                                 hashlib.md5(chunk).hexdigest(), off))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx",
-                                              "frame_hash", "offset_bytes"])
-
-    return docs_with_blob.mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_features(decoded: DataFrame, max_dim: int = 256) -> DataFrame:
-    """Resize step over decoded metadata: pure Column math on (width,
-    height) — the aspect-preserving target shape a real resize kernel
-    would use; no Python needed because only metadata is transformed."""
-    scale = F.least(F.lit(float(max_dim)) / F.col("width"),
-                    F.lit(float(max_dim)) / F.col("height"),
-                    F.lit(1.0))
-    return decoded.select(
-        "doc_id", "feature_hash",
-        F.ceil(F.col("width") * scale).cast("int").alias("out_width"),
-        F.ceil(F.col("height") * scale).cast("int").alias("out_height"))

@@ -38,7 +38,7 @@ from kglinker.ops.util import fround
 
 __all__ = ["cosine_topk", "hyperplanes", "lsh_buckets", "lsh_band_keys",
            "lsh_topk", "lsh_neardup_pairs", "cosine_pairs_same_label",
-           "ivf_assign", "ivf_fit", "ivf_topk"]
+           "ivf_fit", "ivf_topk"]
 
 
 def _dot(a: str, b: str) -> F.Column:
@@ -217,17 +217,17 @@ def _assign_broadcast(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     return e.join(best, "vec_id").select("vec_id", "v", "cent_id")
 
 
-def _assign(e: DataFrame, cents: dict[int, list[float]],
-            mode: str = "auto") -> DataFrame:
-    if mode == "literal" or (mode == "auto"
-                             and len(cents) <= LITERAL_CENTROID_MAX):
+def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
+    if len(cents) <= LITERAL_CENTROID_MAX:
         return _assign_literal(e, cents)
     return _assign_broadcast(e, cents)
 
 
-def ivf_assign(emb: DataFrame, n_centroids: int = 8,
-               kmeans_iters: int = 2, assign_mode: str = "auto") -> DataFrame:
-    """(vec_id, v, cent_id): IVF coarse quantization.
+def ivf_fit(emb: DataFrame, n_centroids: int = 8, kmeans_iters: int = 2
+            ) -> tuple[DataFrame, dict[int, list[float]]]:
+    """IVF coarse quantization: ((vec_id, v, cent_id) assignment
+    DataFrame, final centroids) — the centroid dict is the driver-side
+    model state multi-probe search needs.
 
     Seeds = the first ``n_centroids`` vectors by vec_id (deterministic, no
     RNG), refined by ``kmeans_iters`` Lloyd iterations: assign → new
@@ -239,26 +239,16 @@ def ivf_assign(emb: DataFrame, n_centroids: int = 8,
     Scale: centroids are driver-side state (n_centroids × dim doubles —
     the standard distributed k-means shape); each iteration is one
     assignment pass + one (cent_id, dim) aggregation + a tiny collect.
-    ``assign_mode``: 'literal' embeds centroids as codegen literals
-    (shuffle-free, right up to ``LITERAL_CENTROID_MAX``); 'broadcast'
-    scores against a broadcast centroid DataFrame (the 4k–64k-centroid
-    production path); 'auto' (default) picks by count. Both produce
-    bit-identical assignments (tests/test_ivf_recall.py asserts it).
-    Empty clusters keep their previous centroid."""
-    return ivf_fit(emb, n_centroids, kmeans_iters, assign_mode)[0]
-
-
-def ivf_fit(emb: DataFrame, n_centroids: int = 8,
-            kmeans_iters: int = 2, assign_mode: str = "auto"
-            ) -> tuple[DataFrame, dict[int, list[float]]]:
-    """(assignment DataFrame, final centroids) — the centroid dict is the
-    driver-side model state multi-probe search needs (see
-    :func:`ivf_assign` for the semantics and scale notes)."""
+    Up to ``LITERAL_CENTROID_MAX`` centroids the assignment embeds them
+    as codegen literals (shuffle-free); above it, it scores against a
+    broadcast centroid DataFrame (the 4k–64k-centroid production path).
+    Both produce bit-identical assignments (tests/test_ivf_recall.py
+    asserts it). Empty clusters keep their previous centroid."""
     e = emb.select("vec_id", _as_double("embedding").alias("v"))
     cents = {int(r["vec_id"]): list(r["v"]) for r in
              e.filter(F.col("vec_id") < n_centroids).collect()}
     for _ in range(kmeans_iters):
-        assigned = _assign(e, cents, assign_mode)
+        assigned = _assign(e, cents)
         means = (assigned
                  .select("cent_id", F.posexplode("v").alias("dim", "val"))
                  .groupBy("cent_id", "dim")
@@ -269,12 +259,11 @@ def ivf_fit(emb: DataFrame, n_centroids: int = 8,
                      lambda s: s["mv"]).alias("cv")))
         got = {int(r["cent_id"]): list(r["cv"]) for r in means.collect()}
         cents = {cid: got.get(cid, cv) for cid, cv in cents.items()}
-    return _assign(e, cents, assign_mode), cents
+    return _assign(e, cents), cents
 
 
 def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
-             n_centroids: int = 8, kmeans_iters: int = 2,
-             assign_mode: str = "auto", nprobe: int = 1,
+             n_centroids: int = 8, kmeans_iters: int = 2, nprobe: int = 1,
              fitted: tuple[DataFrame, dict[int, list[float]]] | None = None
              ) -> DataFrame:
     """IVF ANN: each query probes the inverted lists of its ``nprobe``
@@ -290,7 +279,7 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     re-running the Lloyd iterations (r6 review: the merged gate paid the
     fit twice)."""
     assign, cents = (fitted if fitted is not None
-                     else ivf_fit(emb, n_centroids, kmeans_iters, assign_mode))
+                     else ivf_fit(emb, n_centroids, kmeans_iters))
     # corpus-side norm once per vector (r7, see cosine_topk); the query
     # side is tiny and normed inside the per-branch q construction
     assign = assign.select("vec_id", "v", "cent_id").withColumn(

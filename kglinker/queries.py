@@ -1549,8 +1549,7 @@ def q_multimodal_decode(spark, sf_dir):
     handling, or any filter reconstruction corrupts the pixel bytes and
     hash-mismatches the gate."""
     from kglinker.ops.multimodal import decode_media, synth_media
-    return decode_media(synth_media(_read_fan(spark, sf_dir, "documents")),
-                        fake=False) \
+    return decode_media(synth_media(_read_fan(spark, sf_dir, "documents"))) \
         .select("doc_id", "mime", "width", "height", "channels", "px_sum")
 
 

@@ -1,8 +1,7 @@
-"""Evidence for the bucketing claims in the 100 TB design notes
+"""Evidence for the bucketing claim in the 100 TB design notes
 (ops/dedup.py: "bucket the table by text_hash to make re-runs
-shuffle-free"; streaming/dedup.py: "bucket the state by text_hash"):
-a bucketBy-written table lets the hash aggregation and the state
-anti-join run WITHOUT an Exchange on the bucketed side."""
+shuffle-free"): a bucketBy-written table lets the hash aggregation and
+a text_hash equijoin run WITHOUT an Exchange on the bucketed side."""
 
 from __future__ import annotations
 
@@ -38,9 +37,9 @@ def test_bucketed_groupby_has_no_exchange(spark, bucketed_docs):
 
 
 def test_bucketed_self_join_has_no_exchange(spark, bucketed_docs):
-    """text_hash equijoin between two reads of the bucketed table (the
-    streaming seen-state anti-join shape): both sides pre-partitioned →
-    SortMergeJoin with zero Exchange."""
+    """text_hash equijoin between two reads of the bucketed table (a
+    re-run joined against its previous output): both sides
+    pre-partitioned → SortMergeJoin with zero Exchange."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         a = bucketed_docs.select("text_hash", "doc_id")
@@ -54,45 +53,3 @@ def test_bucketed_self_join_has_no_exchange(spark, bucketed_docs):
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
-
-def test_neardup_sig_state_bucketed_probe_no_state_exchange(spark):
-    """streaming/dedup.py near-dup docstring promise ("bucket the state
-    by band key so each batch probes only its buckets"): a signature
-    state written bucketBy(band, key) lets the per-batch candidate
-    equijoin run with NO exchange on the state side — the only Exchange
-    in the plan shuffles the (small) batch into the state's bucketing.
-    Mirrors the batch-dedup evidence above (r4 verdict #7)."""
-    from kglinker.ops.dedup import minhash_band_exprs, minhash_signatures
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    n_hashes, bands = 8, 4
-    sig = minhash_signatures(docs, n_hashes)
-    exprs = minhash_band_exprs(n_hashes, bands)
-    banded = (sig.select("doc_id", F.explode(F.array(*exprs)).alias("bk"))
-              .select("doc_id", F.col("bk.band").alias("band"),
-                      F.col("bk.key").alias("key")))
-    spark.sql("DROP TABLE IF EXISTS sig_state_bucketed")
-    (banded.write.mode("overwrite")
-     .bucketBy(8, "band", "key").sortBy("band", "key")
-     .saveAsTable("sig_state_bucketed"))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        state = spark.table("sig_state_bucketed")
-        batch = (banded.filter(F.col("doc_id") % 7 == 0)
-                 .select("band", "key",
-                         F.col("doc_id").alias("new_doc")))
-        j = batch.join(state, ["band", "key"])
-        j.collect()
-        plan = _plan(j)
-        final = plan.split("== Initial Plan ==")[0]
-        assert "SortMergeJoin" in final
-        # the state scan reads the bucketed layout …
-        scan_at = final.index("FileScan parquet spark_catalog.default."
-                              "sig_state_bucketed")
-        assert "Bucketed: true" in final[scan_at:scan_at + 2000]
-        # … and the state branch (its Sort directly over the scan) holds
-        # NO Exchange: only the batch side shuffles into the bucketing
-        branch_tail = final[final.rindex("Sort ", 0, scan_at):scan_at]
-        assert "Exchange" not in branch_tail, branch_tail
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS sig_state_bucketed")

@@ -23,27 +23,7 @@ def test_entry_contract(spark):
 def test_multimodal_decode_stub_raises(spark):
     from kglinker.ops.multimodal import attach_blob, decode_media
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = decode_media(attach_blob(docs), fake=False)
+    out = decode_media(attach_blob(docs))
     with pytest.raises(Exception, match="NotImplementedError|media decode"):
         out.count()
 
-
-def test_multimodal_fake_decode_shape(spark):
-    from kglinker.ops.multimodal import attach_blob, decode_media
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = decode_media(attach_blob(docs), fake=True)
-    row = out.filter("doc_id = 0").collect()[0]
-    assert 1 <= row["width"] <= 512 and 1 <= row["height"] <= 512
-    assert len(row["feature_hash"]) == 32
-
-
-def test_multimodal_frame_sample_and_resize(spark):
-    from kglinker.ops.multimodal import (attach_blob, decode_media,
-                                         frame_sample, resize_features)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    frames = frame_sample(attach_blob(docs), every_n_bytes=64)
-    f0 = frames.filter("doc_id = 1").orderBy("frame_idx").collect()
-    assert len(f0) >= 2 and f0[0]["offset_bytes"] == 0 and f0[1]["offset_bytes"] == 64
-    rs = resize_features(decode_media(attach_blob(docs), fake=True), max_dim=256)
-    row = rs.filter("doc_id = 0").collect()[0]
-    assert 1 <= row["out_width"] <= 256 and 1 <= row["out_height"] <= 256

@@ -9,7 +9,8 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from kglinker.ops.similarity import cosine_topk, ivf_topk
+from kglinker.ops import similarity
+from kglinker.ops.similarity import cosine_topk, ivf_fit, ivf_topk
 
 DIM = 16
 N_CLUSTERS = 6
@@ -58,37 +59,42 @@ def test_kmeans_refinement_improves_recall(spark):
     assert r_kmeans >= 0.9, (r_seed, r_kmeans)
 
 
-def test_assignment_paths_identical(spark):
+def test_assignment_paths_identical(spark, monkeypatch):
     """The literal-expression and broadcast-join assignment paths must be
     bit-identical (r2 verdict demand #4) — same fround similarity, same
-    (−sim, cent_id) argmin ordering — including through Lloyd refinement."""
-    from kglinker.ops.similarity import ivf_assign
+    (−sim, cent_id) argmin ordering — including through Lloyd refinement.
+    ``LITERAL_CENTROID_MAX`` picks the path: 10**6 forces literal, 0
+    forces broadcast."""
     emb = _emb(spark).cache()
     for iters in (0, 2):
-        lit = {(r["vec_id"], r["cent_id"]) for r in
-               ivf_assign(emb, N_CLUSTERS, iters, assign_mode="literal").collect()}
-        bc = {(r["vec_id"], r["cent_id"]) for r in
-              ivf_assign(emb, N_CLUSTERS, iters, assign_mode="broadcast").collect()}
+        got = []
+        for cap in (10**6, 0):
+            monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", cap)
+            got.append({(r["vec_id"], r["cent_id"]) for r in
+                        ivf_fit(emb, N_CLUSTERS, iters)[0].collect()})
+        lit, bc = got
         assert lit == bc
 
 
-def test_ivf_topk_identical_across_paths(spark):
+def test_ivf_topk_identical_across_paths(spark, monkeypatch):
     emb = _emb(spark).cache()
-    lit = sorted(map(tuple, ivf_topk(emb, [10, 77], 5, N_CLUSTERS, 2,
-                                     assign_mode="literal").collect()))
-    bc = sorted(map(tuple, ivf_topk(emb, [10, 77], 5, N_CLUSTERS, 2,
-                                    assign_mode="broadcast").collect()))
+    got = []
+    for cap in (10**6, 0):
+        monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", cap)
+        got.append(sorted(map(tuple, ivf_topk(emb, [10, 77], 5, N_CLUSTERS,
+                                              2).collect())))
+    lit, bc = got
     assert lit == bc
 
 
-def test_broadcast_assignment_512_centroids(spark):
+def test_broadcast_assignment_512_centroids(spark, monkeypatch):
     """Production centroid counts (4k–64k) are broadcast-path territory —
     the literal expression would be a 512+-branch codegen tree. Verify the
     broadcast path at 512 centroids against a driver-side numpy replica of
     the exact argmin (fround(sim, 4), ties → cent_id asc)."""
     import math
 
-    from kglinker.ops.similarity import ivf_assign
+    monkeypatch.setattr(similarity, "LITERAL_CENTROID_MAX", 0)
     n, dim, n_cents = 1200, 8, 512
     rows = []
     for i in range(n):
@@ -97,8 +103,7 @@ def test_broadcast_assignment_512_centroids(spark):
             / float(0xFFFFFFFF) - 0.5 for d in range(dim)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {r["vec_id"]: r["cent_id"] for r in
-           ivf_assign(emb, n_cents, kmeans_iters=0,
-                      assign_mode="broadcast").collect()}
+           ivf_fit(emb, n_cents, kmeans_iters=0)[0].collect()}
     assert len(got) == n
 
     def fr(x: float) -> float:
@@ -118,9 +123,8 @@ def test_broadcast_assignment_512_centroids(spark):
 def test_kmeans_assignment_matches_labels(spark):
     """After 2 Lloyd iterations the partition should essentially recover
     the generating clusters: vectors sharing a label share a centroid."""
-    from kglinker.ops.similarity import ivf_assign
     emb = _emb(spark)
-    assign = ivf_assign(emb, n_centroids=N_CLUSTERS, kmeans_iters=2)
+    assign = ivf_fit(emb, n_centroids=N_CLUSTERS, kmeans_iters=2)[0]
     j = assign.join(emb.select("vec_id", "label"), "vec_id")
     # dominant centroid per label covers ≥90% of the label's vectors
     dom = (j.groupBy("label", "cent_id").count()

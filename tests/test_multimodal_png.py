@@ -52,7 +52,7 @@ def test_decode_media_mixed_png_ppm(spark):
     PPM decodes with correct per-format mime/dims/channels/px_sum."""
     docs = spark.range(0, 12).withColumnRenamed("id", "doc_id")
     out = {r["doc_id"]: r
-           for r in decode_media(synth_media(docs), fake=False).collect()}
+           for r in decode_media(synth_media(docs)).collect()}
     assert len(out) == 12
     for d, r in out.items():
         w, h = 1 + (d * 7) % 12, 1 + (d * 3) % 8

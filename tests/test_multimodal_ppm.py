@@ -27,7 +27,7 @@ def test_decode_media_real_ppm(spark):
     blobs = [(i, synth_ppm(i, 8 + i, 4), "image/x-portable-pixmap")
              for i in range(4)]
     df = spark.createDataFrame(blobs, "doc_id long, blob binary, mime string")
-    out = {r["doc_id"]: r for r in decode_media(df, fake=False).collect()}
+    out = {r["doc_id"]: r for r in decode_media(df).collect()}
     assert out[2]["width"] == 10 and out[2]["height"] == 4
     assert len(out[0]["feature_hash"]) == 32
     assert out[3]["n_bytes"] == len(synth_ppm(3, 11, 4))
@@ -38,4 +38,4 @@ def test_decode_media_unsupported_still_raises(spark):
                                "doc_id long, blob binary, mime string")
     import pytest
     with pytest.raises(Exception, match="PIL/ffmpeg|NotImplementedError"):
-        decode_media(df, fake=False).count()
+        decode_media(df).count()
